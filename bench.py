@@ -99,12 +99,13 @@ def main() -> None:
         """ONE JSON line <= 1900 chars (the driver parses only the last
         ~2000 chars of the combined tail). PURE — trims work on local
         copies, so repeated per-phase emission never degrades state.
-        Trim tiers, in order: per-query rounding -> per-query drops
-        (full set lives in the stderr/partial-file record; the driver's
-        CORRECTNESS record re-times the prefix anyway) -> spread/total/
-        absolute rounding -> probe_100x collapse to wall-only -> drop
-        10x-probe rows fastest-large-side-first (probe_pairs and
-        probe_100x — the 100 TB story — are never dropped)."""
+        Trim tiers, in order: per-query rounding (2, then 1 dp) ->
+        stable subset of the 10 slowest queries -> probe rounding
+        (spread, absolute walls and the total) -> drop 10x-probe rows
+        fastest-large-side-first -> probe_100x collapse to wall-only ->
+        pop per-query entries fastest-first as the last resort. The
+        full record lives in BENCH_PARTIAL.json and on stderr;
+        probe_pairs, spot_fit and probe_calib are never dropped."""
         total = round(st["total"], 4)
         probe = {}
         for n, ab in st["probe_abs"].items():

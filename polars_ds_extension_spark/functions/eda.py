@@ -36,7 +36,7 @@ def describe(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     # (plans/ranks.exact_quantiles: ONE more scan with observe()-riding
     # counts) — never F.median, whose physical agg merges every value
     # in ONE reducer (a single-node sort at scale).
-    from .._utils import spread
+    from .._utils import overlap, spread
     from ..plans.ranks import (
         exact_quantiles, quantile_sketch_aggs, quantile_sketch_parse,
     )
@@ -58,14 +58,12 @@ def describe(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     # scan are independent jobs — submit them from two driver threads
     # so the second scan back-fills executors freed by the first's
     # tail instead of waiting for it.
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_stats = ex.submit(lambda: df.agg(*aggs).first().asDict())
-        f_nd = ex.submit(lambda: df.agg(*[
+    row, nd = overlap(
+        lambda: df.agg(*aggs).first().asDict(),
+        lambda: df.agg(*[
             F.count_distinct(F.col(c)).alias(f"{c}__nd") for c in cols
         ]).first().asDict())
-        row = f_stats.result()
-        row.update(f_nd.result())
+    row.update(nd)
     meds = exact_quantiles(df, {c: [0.5] for c in cols},
                            presketch=quantile_sketch_parse(row, cols))
     for c in cols:

@@ -433,14 +433,6 @@ def detrend(df: DataFrame, x, order_by, by: Sequence[str] | None = None,
 
 # ----------------------------------------------- drift / encoding operators
 
-def _dist_pcts(df: DataFrame, col_expr: Column, bin_expr: Column) -> DataFrame:
-    return (
-        df.select(bin_expr.alias("bin"))
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
 def psi_discrete(df_new: DataFrame, df_base: DataFrame, x: str,
                  imputed_pct: float = 0.0001) -> DataFrame:
     """PSI treating x as a discrete category column. Ref num.py:588.

@@ -249,15 +249,6 @@ def _lcs_substr(s1: str, s2: str) -> str:
     return s1[best_end - best: best_end]
 
 
-def _pair_udf(fn, ret: str):
-    @pandas_udf(ret)
-    def _udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if x is None or y is None else fn(x, y) for x, y in zip(a, b)]
-        )
-    return _udf
-
-
 # ---------------------------------------------- batch-vectorized kernels
 # The DP/matching loops run over (i, j) character positions in Python but
 # every inner operation is vectorized across the WHOLE Arrow batch with

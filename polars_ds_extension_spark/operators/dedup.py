@@ -27,12 +27,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
-# 31-bit Mersenne prime modulus for the permutation family: products
-# a·h + b stay < 2^62, so the arithmetic is exact in int64 everywhere
-# (Spark, numpy, any engine).
-_P31 = (1 << 31) - 1
-
-
 # --------------------------------------------------------------- exact dedup
 
 def exact_dedup(df: DataFrame, cols: Sequence[str], id_col: str) -> DataFrame:
@@ -145,75 +139,6 @@ def _let(bound: Column, body) -> Column:
     return F.element_at(F.transform(F.array(bound), body), 1)
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 96) -> Column:
-    """MinHash signature: array of n_hashes longs.
-
-    min over shingles of xxhash64(shingle, seed) for each seed — one nested
-    higher-order expression, fully JVM-side, O(n_hashes · |shingles|) per
-    row with zero shuffle. The plan stays constant-size (the seed loop is a
-    runtime sequence, not unrolled Python).
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, i))),
-    )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    sig_col: str,
-    bands: int = 32,
-    rows_per_band: int = 3,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """Candidate near-dup id pairs from banded MinHash signatures.
-
-    ONE shuffle on (band, band_hash). Pairs are generated inside each
-    bucket with a JVM nested-transform over the collected id array —
-    buckets larger than ``max_bucket`` are dropped (at 100 TB a giant
-    bucket means degenerate boilerplate; cap + log, don't explode).
-    Output: (id_a, id_b) with id_a < id_b, distinct.
-    """
-    # sig_col is a materialized column (the signature UDF's output), so
-    # each band slices it directly — no let-binding. (A _let wrapper here
-    # pushed the Generate onto an interpreted non-codegen path: measured
-    # 6× slower on the simhash twin of this explode.)
-    sig = F.col(sig_col)
-    band = F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda j: F.struct(
-                j.alias("band"),
-                F.xxhash64(F.slice(sig, j * rows_per_band + 1,
-                                   rows_per_band)).alias("bh"),
-            ),
-        )
-    )
-    exploded = df.select(F.col(id_col).alias("__id"), band.alias("__b"))
-    buckets = (
-        exploded.groupBy("__b")
-        .agg(F.collect_set("__id").alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-        .select(F.array_sort("ids").alias("ids"))
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2,
-                                F.greatest(F.size("ids") - i - 1, F.lit(0))),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return pairs.select("p.id_a", "p.id_b").distinct()
-
-
 def minhash_band_hashes(hashes: Column, n_hashes: int = 96,
                         bands: int = 32) -> Column:
     """Banded MinHash from per-shingle base hashes → array<long> of band
@@ -298,10 +223,12 @@ def _minhash_base(df: DataFrame, id_col: str, text_col: str,
     materialize-once tradeoff Spark ML's MinHashLSH makes. Shingles are
     stored as xxhash64 longs (distinct k-grams → distinct longs at
     ~n²/2⁶⁴ collision odds): 3× smaller pinned frame than 12-char
-    strings and long-array intersects on the verify hot path."""
-    from .._utils import pin, spread
+    strings and long-array intersects on the verify hot path. The
+    geometry is recorded on the frame, so `_ready_base` can check a
+    reused base."""
+    from .._utils import pin, record, spread
 
-    return pin(spread(df).select(
+    return record(pin(spread(df).select(
         F.col(id_col).alias("__id"),
         # 8-byte text hash rides the pin so identical-text handling
         # (within-pairs, candidate h-filter) never re-scans the corpus
@@ -309,7 +236,33 @@ def _minhash_base(df: DataFrame, id_col: str, text_col: str,
                    else text_col).alias("__th"),
         hashed_char_shingles(text_col, shingle_k).alias("__sh"),
     ).withColumn(
-        "__bands", minhash_band_hashes(F.col("__sh"), n_hashes, bands)))
+        "__bands", minhash_band_hashes(F.col("__sh"), n_hashes, bands))),
+        "_mh", f"{shingle_k}/{n_hashes}/{bands}")
+
+
+def _ready_base(base: DataFrame | None, df: DataFrame, id_col: str,
+                text_col: str, shingle_k: int, n_hashes: int,
+                bands: int) -> DataFrame:
+    """The materialized minhash base an index operator works on: the
+    caller's ``base`` (from `_overlap_minhash_bases`) after checking it
+    was built with THIS geometry — a mismatched base would bucket and
+    verify with the wrong hashes and silently lose recall — or a fresh
+    one, materialized eagerly: every index plan reads it from two
+    subtrees, and a lazily persisted pin runs its Arrow banding UDF once
+    per unmaterialized read in the first job."""
+    from .._utils import materialize, recorded
+
+    if base is None:
+        return materialize(_minhash_base(df, id_col, text_col, shingle_k,
+                                         n_hashes, bands))[0]
+    want, got = f"{shingle_k}/{n_hashes}/{bands}", recorded(base, "_mh")
+    if got != want:
+        raise ValueError(
+            f"_base was built with minhash geometry {got} "
+            f"(shingle_k/n_hashes/bands) but the caller asked for "
+            f"{want}; pass a base from _overlap_minhash_bases built with "
+            "the same parameters")
+    return base
 
 
 def _overlap_minhash_bases(frames: "Sequence[tuple[DataFrame, str, str]]",
@@ -324,14 +277,11 @@ def _overlap_minhash_bases(frames: "Sequence[tuple[DataFrame, str, str]]",
     `build_near_dup_index` / `update_near_dup_index` /
     `near_dup_against_prebuilt` via ``_base=`` (which skips the
     operator's own build + eager count). Each element of ``frames`` is
-    (df, id_col, text_col)."""
-    from concurrent.futures import ThreadPoolExecutor
+    (df, id_col, text_col). If one build fails, none stays pinned."""
+    from .._utils import materialize
 
-    bases = [_minhash_base(df, i, t, shingle_k, n_hashes, bands)
-             for df, i, t in frames]
-    with ThreadPoolExecutor(max_workers=min(4, len(bases))) as ex:
-        list(ex.map(lambda b: b.count(), bases))
-    return bases
+    return materialize(*[_minhash_base(df, i, t, shingle_k, n_hashes, bands)
+                         for df, i, t in frames])
 
 
 def _lsh_buckets(base: DataFrame, max_bucket: int) -> DataFrame:
@@ -362,23 +312,11 @@ def _bucket_pairs(buckets: DataFrame) -> DataFrame:
     """i<j member pairs of each bucket via one JVM nested transform —
     NOT yet distinct (a high-similarity pair surfaces from most of its
     32 bands; callers .distinct() once after)."""
-    return buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2,
-                                F.greatest(F.size("ids") - i - 1, F.lit(0))),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b")
+    from .._utils import pairs
 
-
-_GATE_CACHE: "weakref.WeakKeyDictionary[DataFrame, tuple]" = None
+    return buckets.select(F.explode(pairs(
+        "ids", lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")))
+    ).alias("p")).select("p.id_a", "p.id_b")
 
 
 def _collapse_rule(n: int, nd: int) -> bool:
@@ -389,52 +327,36 @@ def _collapse_rule(n: int, nd: int) -> bool:
     return bool(n) and (n - nd) / n > 0.10
 
 
-def _gate_memo(df: DataFrame, text_col: str,
-               result: "tuple[bool, int] | None" = None):
-    """Weak per-(frame, text column) memo for the adaptive-collapse
-    gate: composed pipelines that run several gated operators over the
-    SAME DataFrame object and column pay the count+HLL corpus scan once
-    (the knn_join route-memo pattern). The key includes ``text_col`` —
-    the dup rate is a property of the COLUMN, and two columns of one
-    frame (raw vs normalized text) can sit on opposite sides of the
-    gate (r11 review finding). Object-keyed with no invalidation — same
-    staleness caveat as knn._INDEX_COUNT_CACHE: a long-lived frame over
-    files that grow underneath it keeps its first measured rate. Both
-    gate branches are value-identical by contract, so a stale HIT can
-    only cost time, never correctness."""
-    import weakref
-
-    global _GATE_CACHE
-    if _GATE_CACHE is None:
-        _GATE_CACHE = weakref.WeakKeyDictionary()
-    if result is None:
-        hit = _GATE_CACHE.get(df)
-        return hit.get(text_col) if hit is not None else None
-    try:
-        _GATE_CACHE.setdefault(df, {})[text_col] = result
-    except TypeError:  # unhashable/weakref-less frame — just skip
-        pass
-    return result
-
-
 def _dup_rate_gate(df: DataFrame, text_col: str) -> "tuple[bool, int]":
     """The shared adaptive-collapse gate: ONE count + approx-distinct
     (HLL) aggregation measures the exact-dup rate; collapse when > 10%
     (`_collapse_rule`). Approx, not exact — a 5% rsd cannot flip a
     decision that only matters when the true rate is far from the 10%
-    line. Returns (collapse, n_rows), memoized per frame object via
-    `_gate_memo`. Every caller that claims to mirror the gate
-    (`lsh_candidate_stats`, `near_dup_pairs`,
+    line. Returns (collapse, n_rows). Every caller that claims to
+    mirror the gate (`lsh_candidate_stats`, `near_dup_pairs`,
     `near_dup_canonical_dedup`) MUST route through this helper or
     `_collapse_rule` so the diagnostic can never desynchronize from
-    the plans it measures."""
-    hit = _gate_memo(df, text_col)
-    if hit is not None:
-        return hit
-    n, nd = df.agg(
-        F.count(F.lit(1)),
-        F.approx_count_distinct(F.xxhash64(F.col(text_col)))).first()
-    return _gate_memo(df, text_col, (_collapse_rule(n, nd), int(n)))
+    the plans it measures.
+
+    Memoized per (frame object, text column) under `_gate_key`:
+    composed pipelines that run several gated operators over the SAME
+    frame pay the corpus scan once. The key includes the column — two
+    columns of one frame (raw vs normalized text) can sit on opposite
+    sides of the gate. Both gate branches are value-identical by
+    contract, so a stale hit can only cost time, never correctness."""
+    from .._utils import memo
+
+    def _measure():
+        n, nd = df.agg(
+            F.count(F.lit(1)),
+            F.approx_count_distinct(F.xxhash64(F.col(text_col)))).first()
+        return _collapse_rule(n, nd), int(n)
+
+    return memo(df, _gate_key(text_col), _measure)
+
+
+def _gate_key(text_col: str) -> tuple:
+    return ("dup_rate", text_col)
 
 
 def _rep_corpus(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -501,21 +423,21 @@ def lsh_candidate_stats(
     sizes = (base.select("__id", F.posexplode("__bands").alias("band", "bh"))
              .groupBy("band", "bh").agg(F.count(F.lit(1)).alias("n"))
              .where(F.col("n") >= 2))
-    agg = sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("n").alias("max_bucket_size"),
-        F.sum(F.when(F.col("n") > max_bucket, 1).otherwise(0))
-        .alias("dropped_buckets"),
-        F.sum(F.when(F.col("n") <= max_bucket,
-                     F.col("n") * (F.col("n") - 1) / 2).otherwise(0))
-        .alias("cand_slots"),
-    ).collect()[0]
-    n_mined = base.count()
-    cand_distinct = _bucket_pairs(
-        _lsh_buckets(base, max_bucket)).distinct().count()
-    unpin(base)  # only OUR pin — a global release_pins() here would
-    # evict every other live pin in the session (diagnostics must not
-    # have side effects on unrelated plans)
+    try:
+        agg = sizes.agg(
+            F.count(F.lit(1)).alias("n_buckets"),
+            F.max("n").alias("max_bucket_size"),
+            F.sum(F.when(F.col("n") > max_bucket, 1).otherwise(0))
+            .alias("dropped_buckets"),
+            F.sum(F.when(F.col("n") <= max_bucket,
+                         F.col("n") * (F.col("n") - 1) / 2).otherwise(0))
+            .alias("cand_slots"),
+        ).collect()[0]
+        n_mined = base.count()
+        cand_distinct = _bucket_pairs(
+            _lsh_buckets(base, max_bucket)).distinct().count()
+    finally:
+        unpin(base)  # the base never escapes this diagnostic
     if not collapse:
         n_rows = int(n_mined)  # mined the full corpus — no extra count
     elif n_rows is None:
@@ -889,22 +811,17 @@ def near_dup_against_index(
     Output: one row per flagged new doc — (new_id, index_id, jaccard)
     with its BEST match (max Jaccard, ties → min index_id).
     """
-    nb = _minhash_base(new, id_col, text_col, shingle_k, n_hashes, bands)
-    ib = _minhash_base(index, id_col, text_col, shingle_k, n_hashes, bands)
     # materialize both pins EAGERLY: the two-frame plan reads each pin
     # from two subtrees of one action (bucket path + verify path), and
     # a lazily-persisted pin computes its Arrow banding UDF once per
     # unmaterialized read in that first job (measured 10.6 → 6.2 s at
-    # the 10× probe). One count per pin is two cheap scans by contrast.
-    # (near_dup_pairs deliberately stays lazy — its single-frame action
-    # shares the pin fine, and the extra pass measured net-negative.)
-    # r15 (guide §2.6): the two pin materializations are independent
-    # jobs — overlap them so the small batch's scan back-fills the
-    # index scan's tail instead of waiting behind it.
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as _ex:
-        _fn, _fi = _ex.submit(nb.count), _ex.submit(ib.count)
-        _fn.result(), _fi.result()
+    # the 10× probe). One count per pin is two cheap scans by contrast,
+    # and they overlap. (near_dup_pairs deliberately stays lazy — its
+    # single-frame action shares the pin fine, and the extra pass
+    # measured net-negative.)
+    nb, ib = _overlap_minhash_bases(
+        [(new, id_col, text_col), (index, id_col, text_col)],
+        shingle_k, n_hashes, bands)
     idx_buckets = _index_buckets(ib, max_bucket)
     ish = ib.select(F.col("__id").alias("index_id"),
                     F.col("__sh").alias("shingles"))
@@ -1032,35 +949,22 @@ def build_near_dup_index(
     # ``_base``: a pre-materialized base from _overlap_minhash_bases —
     # the composed lifecycle queries overlap the three independent
     # banding scans instead of serializing them (r16, guide §2.6)
-    if _base is not None:
-        ib = _base
-    else:
-        ib = _minhash_base(docs, id_col, text_col, shingle_k, n_hashes,
-                           bands)
-        # both outputs read the pin (bucket agg + shingle projection);
-        # eager materialization keeps the Arrow banding pass at one run
-        ib.count()
+    from .._utils import stamp
+
+    ib = _ready_base(_base, docs, id_col, text_col, shingle_k, n_hashes,
+                     bands)
     # the LSH parameters ride the bucket rows as one dictionary-encoded
     # literal so a probe/update with mismatched parameters FAILS
     # instead of silently returning zero matches (recall-0 would be
-    # indistinguishable from a clean batch)
-    buckets = _index_buckets(ib, max_bucket, tombstones=True).withColumn(
-        "_lsh", F.lit(f"{shingle_k}/{n_hashes}/{bands}/{max_bucket}"))
-    # r15: pin the bucket artifact. Production persists this frame to
-    # parquet and every consumer reads the file; composed in-session
-    # use (update/probe on the live frame) instead re-ran the bucket
-    # aggregation once per consumer subtree — the stamp check, the
-    # kept/dropped splits and the probe join each replayed it
-    # (measured: index_update 9.7 s, dominated by repeated bucket
-    # aggs). The frame is skinny (8-byte keys + id arrays, no text)
-    # and disk-spillable.
-    from .._utils import pin
-    buckets = pin(buckets)
-    # in-session provenance: the stamp is a single literal ON THIS
-    # FRAME OBJECT by construction, so a same-session consumer can
-    # skip the stamp-uniqueness scan (a full job on a live frame);
-    # parquet round-trips drop plain attributes and get the real check
-    buckets._pds_lsh_stamp = f"{shingle_k}/{n_hashes}/{bands}/{max_bucket}"
+    # indistinguishable from a clean batch). r15: the stamped artifact
+    # is pinned. Production persists it to parquet and every consumer
+    # reads the file; composed in-session use (update/probe on the live
+    # frame) instead re-ran the bucket aggregation once per consumer
+    # subtree (measured: index_update 9.7 s, dominated by repeated
+    # bucket aggs). The frame is skinny (8-byte keys + id arrays, no
+    # text) and disk-spillable.
+    buckets = stamp(_index_buckets(ib, max_bucket, tombstones=True),
+                    "_lsh", f"{shingle_k}/{n_hashes}/{bands}/{max_bucket}")
     shingles = ib.select(F.col("__id").alias("index_id"),
                          F.col("__th").alias("th"),
                          F.col("__sh").alias("shingles"))
@@ -1095,12 +999,8 @@ def near_dup_against_prebuilt(
     silently returning zero matches.
     """
     buckets = _check_lsh_stamp(buckets, shingle_k, n_hashes, bands)
-    if _base is not None:  # pre-materialized (see _overlap_minhash_bases)
-        nb = _base
-    else:
-        nb = _minhash_base(new, id_col, text_col, shingle_k, n_hashes,
-                           bands)
-        nb.count()
+    nb = _ready_base(_base, new, id_col, text_col, shingle_k, n_hashes,
+                     bands)
     return _probe_index(nb, buckets, shingles, threshold)
 
 
@@ -1121,38 +1021,16 @@ def _check_lsh_stamp(buckets: DataFrame, shingle_k: int, n_hashes: int,
                 "max_bucket silently voids update == rebuild); keep "
                 "the stamp when persisting, or rebuild the index")
         return buckets
-    # stamp UNIQUENESS, not a first() sample (r11, the vector-index
-    # review lesson applied here too): a bucket frame unioned from two
-    # index generations is exactly the mixed artifact the stamp exists
-    # to catch, and a sampled row passes whenever it happens to match;
-    # the distinct reads one dictionary-encoded literal column.
-    # r15: a frame carrying build/update's in-session provenance
-    # attribute is single-stamped BY CONSTRUCTION (the stamp is one
-    # literal projected onto that exact frame object), so the
-    # uniqueness scan — a full job when the artifact is a live frame
-    # rather than parquet — is skipped; the parameter check below
-    # still runs against the attribute's value. Any union/round-trip
-    # produces a new frame object without the attribute.
-    live = getattr(buckets, "_pds_lsh_stamp", None)
-    if live is not None:
-        stamps = [(live,)]
-    else:
-        stamps = buckets.select("_lsh").distinct().limit(2).collect()
-    if len(stamps) > 1:
-        raise ValueError(
-            f"bucket frame carries MULTIPLE '_lsh' stamps "
-            f"({stamps[0][0]!r}, {stamps[1][0]!r}, …) — it mixes rows "
-            "from different builds; probing returns silently wrong "
-            "recall and update == rebuild is void. Rebuild, or probe "
-            "one generation at a time.")
-    stamp = stamps[0] if stamps else None
+    from .._utils import read_stamp
+
+    stamp = read_stamp(buckets, "_lsh", "bucket")
     if stamp is not None:
-        got = str(stamp[0]).split("/")
+        got = str(stamp).split("/")
         want = [str(shingle_k), str(n_hashes), str(bands)]
         if max_bucket is not None:
             if len(got) < 4:
                 raise ValueError(
-                    f"index stamp {stamp[0]} predates the cap-bearing "
+                    f"index stamp {stamp} predates the cap-bearing "
                     "format — updating needs max_bucket verified "
                     "(a wrong cap silently voids update == rebuild); "
                     "rebuild the index with this version")
@@ -1161,7 +1039,7 @@ def _check_lsh_stamp(buckets: DataFrame, shingle_k: int, n_hashes: int,
             got = got[:3]
         if got != want:
             raise ValueError(
-                f"index was built with LSH geometry {stamp[0]} "
+                f"index was built with LSH geometry {stamp} "
                 f"(shingle_k/n_hashes/bands[/max_bucket]) but the "
                 f"caller asked for {'/'.join(want)}; band hashes "
                 f"would never collide (or the bucket cap would "
@@ -1225,15 +1103,8 @@ def update_near_dup_index(
             "shingle frame has no 'th' column — the index predates the "
             "updatable artifact format; rebuild it with "
             "build_near_dup_index before updating")
-    if _base is not None:  # pre-materialized (see _overlap_minhash_bases)
-        nb = _base
-    else:
-        nb = _minhash_base(new, id_col, text_col, shingle_k, n_hashes,
-                           bands)
-        # eager pin: the plan reads it from the bucket-merge and
-        # shingle-append subtrees (same rationale as
-        # near_dup_against_index)
-        nb.count()
+    nb = _ready_base(_base, new, id_col, text_col, shingle_k, n_hashes,
+                     bands)
     kept = buckets.where(F.col("ids").isNotNull()).select(
         "band", "bh", F.explode("ids").alias("__id"))
     old_mem = kept.join(
@@ -1247,20 +1118,15 @@ def update_near_dup_index(
         max_bucket, tombstones=True)
     dropped = buckets.where(F.col("ids").isNull()).select("band", "bh")
     ids_t = merged.schema["ids"].dataType
-    out_buckets = (
+    # pinned and stamped like build_near_dup_index's artifact (a
+    # downstream probe's band join would otherwise replay the merge)
+    from .._utils import stamp
+
+    out_buckets = stamp(
         merged.join(dropped, ["band", "bh"], "left_anti")
         .unionByName(dropped.select(
-            "band", "bh", F.lit(None).cast(ids_t).alias("ids")))
-        .withColumn("_lsh",
-                    F.lit(f"{shingle_k}/{n_hashes}/{bands}/{max_bucket}")))
-    # r15: pin the updated artifact — same rationale as
-    # build_near_dup_index (a downstream probe's stamp check + band
-    # join would otherwise each replay the merge aggregation).
-    from .._utils import pin
-    out_buckets = pin(out_buckets)
-    # in-session provenance (see build_near_dup_index)
-    out_buckets._pds_lsh_stamp = \
-        f"{shingle_k}/{n_hashes}/{bands}/{max_bucket}"
+            "band", "bh", F.lit(None).cast(ids_t).alias("ids"))),
+        "_lsh", f"{shingle_k}/{n_hashes}/{bands}/{max_bucket}")
     out_shingles = shingles.unionByName(
         nb.select(F.col("__id").alias("index_id"),
                   F.col("__th").alias("th"),
@@ -1342,7 +1208,7 @@ def simhash_near_dup_pairs(
     volume stays tiny; verification compares two longs.
     Output: (id_a, id_b, hamming).
     """
-    from .._utils import spread
+    from .._utils import pairs, spread
 
     n_tables, width = 4, 16
     base = spread(df).select(
@@ -1350,7 +1216,7 @@ def simhash_near_dup_pairs(
         simhash(F.col(text_col), shingle_k).alias("__sim"),
     )
     # carry (id, fp) through the buckets — the 8-byte fingerprint rides
-    # along, so verification needs no join back to a recomputed base
+    # along, so verification needs no join back to a recomputed base.
     # __sim is the materialized fingerprint column — band extraction
     # reads it directly (wrapping it in a _let binding forced the
     # Generate onto an interpreted path: 6.0s → 0.4s at sf0.1)
@@ -1375,24 +1241,11 @@ def simhash_near_dup_pairs(
         .where((F.size("ss") >= 2) & (F.size("ss") <= max_bucket))
         .select(F.array_sort("ss").alias("ss"))  # struct sort → by id first
     )
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ss"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ss"), i + 2,
-                                F.greatest(F.size("ss") - i - 1, F.lit(0))),
-                        lambda y: F.struct(
-                            x["id"].alias("id_a"), y["id"].alias("id_b"),
-                            hamming64(x["fp"], y["fp"]).alias("hamming"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b", "p.hamming").distinct()
-    return pairs.where(F.col("hamming") <= max_hamming)
+    cand = buckets.select(F.explode(pairs("ss", lambda x, y: F.struct(
+        x["id"].alias("id_a"), y["id"].alias("id_b"),
+        hamming64(x["fp"], y["fp"]).alias("hamming"),
+    ))).alias("p")).select("p.id_a", "p.id_b", "p.hamming").distinct()
+    return cand.where(F.col("hamming") <= max_hamming)
 
 
 # -------------------------------------------------- blocked n-gram jaccard
@@ -1826,22 +1679,22 @@ def _near_dup_edge_set(
     min-of-3 — the cache fill serializes what idle cores absorb; the
     scale decades get their eager materialization from the verify
     kernel's candidate count instead.)"""
-    from .._utils import pin, unpin
+    from .._utils import memo, pin, unpin
 
-    hit = _gate_memo(df, text_col)
     keyed8 = None
-    if hit is not None:
-        do_collapse = hit[0]
-    else:
+
+    def _measure():
         # one pruned (id, xxhash64(text)) scan, pinned: the gate agg
         # materializes it and the exact8 edges below read the 16-byte
         # cache twice instead of re-scanning text for each join side
+        nonlocal keyed8
         keyed8 = pin(df.select(F.col(id_col).alias("__m"),
                                F.xxhash64(F.col(text_col)).alias("__h")))
         n, nd = keyed8.agg(F.count(F.lit(1)),
                            F.approx_count_distinct("__h")).first()
-        do_collapse = _collapse_rule(n, nd)
-        _gate_memo(df, text_col, (do_collapse, int(n)))
+        return _collapse_rule(n, nd), int(n)
+
+    do_collapse = memo(df, _gate_key(text_col), _measure)[0]
     if not do_collapse:
         # exact_pairs=False: the CC only needs connectivity, and the
         # skinny member→rep exact8 edges below connect identical texts
@@ -2142,65 +1995,6 @@ def strip_boilerplate(docs: DataFrame, id_col: str, text_col: str,
             .cast("long").alias("n_removed"),
         )
         .withColumnRenamed("__id", id_col)
-    )
-
-
-def fingerprint_overlap_pairs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_shared: int = 2,
-    window: int = 4,
-    sample_mod: int = 8,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """MOSS-style cross-document overlap: pairs of documents sharing at
-    least ``min_shared`` sampled rolling-window fingerprints
-    (text.fingerprint_set) — catches copied PASSAGES that whole-document
-    minhash misses when the surrounding text differs.
-
-    Plan mirrors the LSH bucket join: explode each document's
-    fingerprint set (density 1/sample_mod of word windows), ONE groupBy
-    on the fingerprint value with a ``max_bucket`` cap (a fingerprint
-    shared by more docs than that is boilerplate, not plagiarism —
-    capped exactly like the minhash buckets), pairs within buckets,
-    then a groupBy counting distinct shared fingerprints per pair.
-    Never all-pairs; the pair term is bounded by max_bucket² per
-    fingerprint.
-
-    Output: (id_a, id_b, shared) with id_a < id_b, shared ≥ min_shared.
-    """
-    from .text import fingerprint_set
-
-    fps = docs.select(
-        F.col(id_col).alias("__id"),
-        F.explode(fingerprint_set(text_col, window=window,
-                                  sample_mod=sample_mod)).alias("__fp"),
-    )
-    buckets = (
-        fps.groupBy("__fp")
-        .agg(F.collect_set("__id").alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-        .select("__fp", F.array_sort("ids").alias("ids"))
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ids"), i + 2,
-                                F.greatest(F.size("ids") - i - 1, F.lit(0))),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b")
-    return (
-        pairs.groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= min_shared)
     )
 
 

@@ -53,21 +53,6 @@ def dequantize_int8(qvec, scale) -> Column:
     return F.transform(q, lambda x: x.cast("double") * s / 127.0)
 
 
-def vector_stats(vec) -> Column:
-    """Struct of per-vector norm/mean/min/max — the EDA pass that flags
-    zero vectors, clipped dims, and scale drift in an embedding lake."""
-    v = _v(vec)
-    d = F.size(v)
-    mean = F.aggregate(v, F.lit(0.0), lambda a, x: a + x) / d
-    return F.struct(
-        d.alias("dim"),
-        norm(v).alias("norm"),
-        mean.alias("mean"),
-        F.array_min(v).alias("min"),
-        F.array_max(v).alias("max"),
-    )
-
-
 # ------------------------------------------------- product quantization (PQ)
 
 def pq_train(df, vec_col: str, m: int = 8, k: int = 16,

@@ -145,12 +145,6 @@ def _collect_index(index: DataFrame, i_id: str, i_vec: str,
     return ids, mat
 
 
-#: knn_join(route="auto") memoizes index row counts here so repeated
-#: calls against the SAME DataFrame object pay the counting action once
-#: (weak keys: entries vanish with the frame, no lifetime coupling)
-_INDEX_COUNT_CACHE: "weakref.WeakKeyDictionary[DataFrame, int]" = None
-
-
 def knn_join(
     queries: DataFrame, q_id: str, q_vec: str,
     index: DataFrame, i_id: str, i_vec: str,
@@ -201,21 +195,11 @@ def knn_join(
                          "cosine use ann_lsh_join(min_cosine=...)")
     if route == "auto":
         import math
-        import weakref
 
-        global _INDEX_COUNT_CACHE
-        if _INDEX_COUNT_CACHE is None:
-            _INDEX_COUNT_CACHE = weakref.WeakKeyDictionary()
-        if index_count is not None:
-            n_index = int(index_count)
-        else:
-            n_index = _INDEX_COUNT_CACHE.get(index)
-            if n_index is None:
-                n_index = index.count()
-                try:
-                    _INDEX_COUNT_CACHE[index] = n_index
-                except TypeError:
-                    pass
+        from .._utils import memo
+
+        n_index = (int(index_count) if index_count is not None
+                   else memo(index, "count", index.count))
         if n_index > route_threshold:
             if metric != "cosine":
                 raise ValueError(
@@ -618,6 +602,8 @@ def ann_lsh_join(
     """
     from pyspark.sql.functions import pandas_udf
 
+    from .._utils import pairs
+
     small_bucket = 64
 
     @pandas_udf("array<long>")
@@ -652,16 +638,10 @@ def ann_lsh_join(
     thr = float(min_cosine) if min_cosine is not None else None
 
     # small buckets: i<j pairs + dot-product cosine, pure JVM
-    pair_structs = F.flatten(F.transform(
-        F.col("mem"),
-        lambda x, i: F.transform(
-            F.slice(F.col("mem"), i + 2,
-                    F.greatest(F.size("mem") - i - 1, F.lit(0))),
-            lambda y: F.struct(
-                x["__id"].alias("id_a"), y["__id"].alias("id_b"),
-                (dot(x["__vec"], y["__vec"]) / (x["__nrm"] * y["__nrm"]))
-                .alias("cosine")),
-        )))
+    pair_structs = pairs("mem", lambda x, y: F.struct(
+        x["__id"].alias("id_a"), y["__id"].alias("id_b"),
+        (dot(x["__vec"], y["__vec"]) / (x["__nrm"] * y["__nrm"]))
+        .alias("cosine")))
     half = (buckets.where(F.size("mem") <= small_bucket)
             .select(F.explode(pair_structs).alias("p"))
             .select("p.id_a", "p.id_b", "p.cosine"))
@@ -1182,42 +1162,16 @@ def _check_ivf_stamp(
 ) -> "tuple[DataFrame, DataFrame, str | None]":
     """Verify the ``_ivf`` stamps of a persisted vector index agree,
     then drop them; returns (centroids, cells, verified_stamp). Each
-    frame's stamp is checked for UNIQUENESS (distinct-limit-2 — a cells
-    frame unioned from two index generations is exactly the mixed
-    artifact the stamp exists to catch, and a first()-sample would pass
-    it whenever the sampled row happened to match; the distinct scan
-    reads one dictionary-encoded literal column, noise next to the
-    search/update that follows). Probes tolerate stripped stamps
-    (``require=False`` — a consistent unstamped artifact still searches
-    correctly); updates REQUIRE both stamps (``require=True``): update
-    ≡ rebuild is void when the cells weren't assigned against these
-    exact centroids, so "can't verify" must raise there, not proceed."""
+    frame's stamp must be unique (`_utils.read_stamp`). Probes tolerate
+    stripped stamps (``require=False`` — a consistent unstamped
+    artifact still searches correctly); updates REQUIRE both stamps
+    (``require=True``): update ≡ rebuild is void when the cells weren't
+    assigned against these exact centroids, so "can't verify" must
+    raise there, not proceed."""
+    from .._utils import read_stamp
 
-    def _uniq(frame: DataFrame, label: str):
-        if "_ivf" not in frame.columns:
-            return None
-        # r15: frames straight from build/update carry the stamp as an
-        # in-session provenance attribute — single-stamped by
-        # construction (one literal projected onto that exact frame
-        # object), so the uniqueness scan (a full assignment replay on
-        # a live cells frame) is skipped; parquet round-trips and
-        # unions produce new frame objects without the attribute and
-        # get the real check.
-        live = getattr(frame, "_pds_ivf_stamp", None)
-        if live is not None:
-            return live
-        got = frame.select("_ivf").distinct().limit(2).collect()
-        if len(got) > 1:
-            raise ValueError(
-                f"vector index {label} frame carries MULTIPLE '_ivf' "
-                f"stamps ({got[0][0]!r}, {got[1][0]!r}, …) — it mixes "
-                "rows from different builds; probing/updating a mixed "
-                "artifact returns silently wrong neighbors. Rebuild, "
-                "or update one generation at a time.")
-        return got[0][0] if got else None
-
-    s_c = _uniq(centroids, "centroid")
-    s_x = _uniq(cells, "cells")
+    s_c = read_stamp(centroids, "_ivf", "vector index centroid")
+    s_x = read_stamp(cells, "_ivf", "vector index cells")
     if require and (s_c is None or s_x is None):
         raise ValueError(
             "vector index frame(s) missing the '_ivf' stamp column — "
@@ -1292,28 +1246,24 @@ def build_vector_index(
     # onto those crashes createDataFrame for string/decimal id spaces
     # (r11 review finding)
     cid_type = cents.schema[c_id].dataType.simpleString()
-    cents_out = spark.createDataFrame(
+    # the inverted file is pinned with its stamp (r15): production
+    # persists it to parquet, but composed in-session use (search /
+    # update / stats on the live frame) re-ran the full assignment GEMM
+    # once per consumer subtree. Same rationale as
+    # build_near_dup_index's bucket pin.
+    from .._utils import stamp as _stamp
+
+    cents_out = _stamp(spark.createDataFrame(
         [(r[0], [float(x) for x in r[1]]) for r in crows],
-        schema=f"centroid_id {cid_type}, "
-               "centroid array<double>").withColumn("_ivf", F.lit(stamp))
-    cells = (ivf_assign(df, id_col, vec_col, cents_out.drop("_ivf"),
-                        "centroid_id", "centroid", carry_vec=True)
-             .select("centroid_id", F.col(id_col).alias("vec_id"),
-                     F.transform(F.col(vec_col),
-                                 lambda x: x.cast("double")).alias("vec"))
-             .withColumn("_ivf", F.lit(stamp)))
-    # r15: pin the inverted-file artifact. Production persists it to
-    # parquet; composed in-session use (search/update/stats on the
-    # live frame) re-ran the full assignment GEMM once per consumer
-    # subtree — the _ivf stamp-uniqueness collect alone replayed it
-    # before the search did. Same rationale as build_near_dup_index's
-    # bucket pin. The in-session provenance attributes let
-    # _check_ivf_stamp skip the uniqueness scan on these exact frame
-    # objects (single-stamped by construction).
-    from .._utils import pin
-    cells = pin(cells)
-    cents_out._pds_ivf_stamp = stamp
-    cells._pds_ivf_stamp = stamp
+        schema=f"centroid_id {cid_type}, centroid array<double>"),
+        "_ivf", stamp, persist=False)
+    cells = _stamp(
+        ivf_assign(df, id_col, vec_col, cents_out.drop("_ivf"),
+                   "centroid_id", "centroid", carry_vec=True)
+        .select("centroid_id", F.col(id_col).alias("vec_id"),
+                F.transform(F.col(vec_col),
+                            lambda x: x.cast("double")).alias("vec")),
+        "_ivf", stamp)
     return cents_out, cells
 
 
@@ -1406,18 +1356,15 @@ def update_vector_index(
                  .select("centroid_id", F.col(id_col).alias("vec_id"),
                          F.transform(F.col(vec_col),
                                      lambda x: x.cast("double"))
-                         .alias("vec"))
-                 .withColumn("_ivf", F.lit(stamp)))
-    # r15: pin the updated artifact (see build_vector_index) — a
-    # downstream probe's stamp check + cell join would otherwise each
-    # replay the batch assignment and the old-cells read.
-    from .._utils import pin
-    out_cells = pin(cells.unionByName(
-        new_cells.select(*cells.columns)))
-    # both generations carry the SAME verified stamp (update requires
-    # and checks it above), so the union is single-stamped by
-    # construction — safe to stamp the provenance attribute
-    out_cells._pds_ivf_stamp = stamp
+                         .alias("vec")))
+    # pinned and re-stamped like build_vector_index's artifact (a
+    # downstream probe's cell join would otherwise replay the batch
+    # assignment and the old-cells read). Both generations carry the
+    # verified stamp, so one literal over the union is value-identical.
+    from .._utils import stamp as _stamp
+
+    out_cells = _stamp(x_chk.unionByName(new_cells.select(*x_chk.columns)),
+                       "_ivf", stamp)
     return centroids, out_cells
 
 

@@ -26,9 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-from .._utils import pin as _shared_pin
-from .._utils import release_pins  # noqa: F401  (re-export for callers)
+from .._utils import pin, to_col
 
 import math as _math
 
@@ -54,21 +52,6 @@ def _dlit(b: float) -> str:
         return f"CAST('{'Infinity' if b > 0 else '-Infinity'}' AS DOUBLE)"
     return f"CAST('{b!r}' AS DOUBLE)"
 
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialize the per-bucket pass once (memory, spill to disk).
-
-    The offsets collect AND every downstream job replay this frame's
-    lineage; without pinning, each consumer re-runs the scan + bucket
-    window (measured 1.8x-2x whole-query cost). This is the classic
-    materialization point of the two-pass prefix plan — the pinned frame
-    is the narrow projected input, never wider, and disk-spillable.
-    Registered with the shared LRU pin registry (_utils.pin) so old
-    queries' caches are evicted instead of accumulating for the session.
-    """
-    return _shared_pin(df)
-
-from .._utils import to_col
 
 _PID = "__pds_pid"
 
@@ -157,7 +140,11 @@ def global_cumsum(df: DataFrame, order_col, value_cols: Sequence[str],
         .rangeBetween(Window.unboundedPreceding, 0)
     for c in value_cols:
         part = part.withColumn(f"__loc_{c}", F.sum(F.col(c)).over(w_local))
-    part = _pin(part)
+    # the materialization point of every two-pass prefix plan here: the
+    # offsets collect AND each downstream job read this narrow frame;
+    # unpinned, each re-runs the scan + bucket window (measured 1.8x-2x
+    # whole-query cost)
+    part = pin(part)
     offs = _offsets(part, keys, {c: F.sum(F.col(c)) for c in value_cols},
                     with_totals=with_totals)
     joined = part.join(offs, [_PID, *keys])
@@ -194,7 +181,7 @@ def global_min_rank(df: DataFrame, order_col,
     if tie_name is not None:
         w_ties = Window.partitionBy(_PID, *keys, to_col(order_col))
         part = part.withColumn(tie_name, F.count(F.lit(1)).over(w_ties))
-    part = _pin(part)
+    part = pin(part)
     offs = _offsets(part, keys, {"n": F.count(F.lit(1)).cast("double")},
                     with_totals=total_name is not None)
     joined = part.join(offs, [_PID, *keys])
@@ -268,7 +255,7 @@ def global_rank_pair(df: DataFrame, x_col, y_col,
             "__tx", F.count(F.lit(1)).over(Window.partitionBy("__px", xc)))
         part = part.withColumn(
             "__ty", F.count(F.lit(1)).over(Window.partitionBy("__py", yc)))
-    part = _pin(part)
+    part = pin(part)
     # r16 (r15 verdict #2): the offsets collect is the two axes'
     # MARGINAL bucket counts, computed server-side in ONE grouping-sets
     # aggregation over the pinned frame — ≤ 2·P rows cross the driver.
@@ -348,7 +335,7 @@ def global_rank_then_lag(df: DataFrame, x_col, y_col,
     wx = Window.partitionBy("__px").orderBy(xc)
     part = part.withColumn(
         "__prevs", F.lag(F.struct(F.col("__lry"), F.col("__py"))).over(wx))
-    part = _pin(part)
+    part = pin(part)
     # r16 (r15 verdict #2): ONE grouping-sets aggregation computes both
     # axes' marginals server-side — the y-bucket counts (offset map) on
     # the {__py} set and each x-bucket's last-by-x row (its local y
@@ -422,7 +409,7 @@ def global_lag(df: DataFrame, order_col, col: str,
     part = _ranged(df, order_col, keys, n_parts)
     w_local = Window.partitionBy(_PID, *keys).orderBy(to_col(order_col))
     part = part.withColumn("__loc_lag", F.lag(F.col(col)).over(w_local))
-    part = _pin(part)
+    part = pin(part)
     # last value of (pid, group) — max_by over the local order
     lasts = (
         part.groupBy(_PID, *keys)
@@ -690,7 +677,7 @@ def exact_quantiles(df: DataFrame, probs_by_col: "dict[str, Sequence[float]]",
                 F.array(*[F.expr(e) for e in mem_exprs]),
                 lambda s: s.isNotNull())).alias("s")
             ).select("s.tag", "s.pid", "s.v")
-            stacked = _pin(stacked)
+            stacked = pin(stacked)
             stacked.count()  # one job: scan + metrics + pinned candidates
         else:
             observed.count()

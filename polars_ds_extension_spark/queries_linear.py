@@ -250,11 +250,9 @@ def onlinelr_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             m.partial_fit(b)
         return m
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_fwd = ex.submit(_fold, batches)
-        f_rev = ex.submit(_fold, list(reversed(batches)))
-        fwd, rev = f_fwd.result(), f_rev.result()
+    from ._utils import overlap
+    fwd, rev = overlap(lambda: _fold(batches),
+                       lambda: _fold(list(reversed(batches))))
     c4 = [round(float(v), 4) for v in fwd.coef_]
     order_inv = c4 == [round(float(v), 4) for v in rev.coef_]
     return spark.createDataFrame(

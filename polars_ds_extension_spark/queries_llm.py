@@ -3148,7 +3148,7 @@ def curation_pipeline_v3_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                        T.fix_double_encoded(raw).alias("t"))
     # the gated frame feeds the LM train, the score join, and the final
     # accounting — pin it so the repair UDF + rule gate run ONCE, not
-    # once per consumer (functions/_utils.pin, LRU-released by bench)
+    # once per consumer (_utils.pin; the pin escapes into the result)
     from ._utils import pin
 
     g = pin(base.where(T.gopher_rules("t").getField("pass")))

@@ -375,6 +375,71 @@ def test_prebuilt_index_geometry_mismatch_raises(spark):
     # matching geometry passes (and the _lsh stamp is dropped)
     D.near_dup_against_prebuilt(new, buckets, shingles, "id", "txt",
                                 bands=16).count()
+    # a pre-materialized _base built with other parameters than the
+    # call's (here bands=32 against bands=16) raises at every consumer
+    (wrong,) = D._overlap_minhash_bases([(new, "id", "txt")])
+    with pytest.raises(ValueError, match="minhash geometry"):
+        D.build_near_dup_index(idx, "id", "txt", bands=16, _base=wrong)
+    with pytest.raises(ValueError, match="minhash geometry"):
+        D.update_near_dup_index(new, buckets, shingles, "id", "txt",
+                                bands=16, _base=wrong)
+    with pytest.raises(ValueError, match="minhash geometry"):
+        D.near_dup_against_prebuilt(new, buckets, shingles, "id", "txt",
+                                    bands=16, _base=wrong)
+
+
+def test_failed_materialization_releases_pins(spark):
+    """Pins an operator uses internally are released on the error path
+    too: a failed `materialize` unpins every frame it was given, and a
+    failing `lsh_candidate_stats` unpins its minhash base. Checked on
+    the CacheManager, which is empty as soon as unpersist returns (the
+    persistent-RDD list lags behind a non-blocking unpersist)."""
+    from polars_ds_extension_spark._utils import materialize, pin
+
+    def boom_at(df, col, at):
+        return df.withColumn(col, F.when(
+            F.col("id") == at, F.raise_error(F.lit("boom at %d" % at)))
+            .otherwise(F.col(col)))
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache.isEmpty()
+    good = pin(spark.range(20).withColumn("x", F.col("id") * 2))
+    bad = pin(boom_at(spark.range(20).withColumn("x", F.col("id")), "x", 11))
+    with pytest.raises(Exception, match="boom at 11"):
+        materialize(good, bad)
+    assert cache.isEmpty()
+
+    # built on range(), not a local relation: the optimizer would fold
+    # the raise_error into a local relation at plan time, before the
+    # operator pins anything
+    docs = spark.range(8).select("id", F.concat(
+        F.lit("some minable text number "), F.col("id").cast("string"),
+        F.lit(" right here")).alias("txt"))
+    with pytest.raises(Exception, match="boom at 5"):
+        D.lsh_candidate_stats(boom_at(docs, "txt", 5), "id", "txt",
+                              collapse=False)
+    assert cache.isEmpty()
+
+
+def test_pairs_expands_every_i_lt_j_pair_in_order(spark):
+    """`_utils.pairs` emits exactly itertools.combinations(arr, 2), in
+    order, for arrays of length 0-6 with repeated values — all cases in
+    one query."""
+    import itertools
+    from polars_ds_extension_spark._utils import pairs
+
+    rng = np.random.default_rng(11)
+    cases = [[]] + [rng.integers(0, 3, size=n).tolist()
+                    for n in range(1, 7) for _ in range(6)]
+    df = spark.createDataFrame(
+        [(i, arr) for i, arr in enumerate(cases)], "case int, arr array<int>")
+    got = dict(df.select("case", pairs(
+        "arr", lambda x, y: F.struct(x.alias("a"), y.alias("b")))
+        .alias("p")).collect())
+    for i, arr in enumerate(cases):
+        assert [(p["a"], p["b"]) for p in got[i]] == \
+            list(itertools.combinations(arr, 2)), arr
 
 
 def test_near_dup_pairs_finds_planted_dups(spark):
