@@ -34,19 +34,25 @@ __all__ = [
 
 def query_r2(actual, pred) -> Column:
     """R², single-pass algebraic form (map-side combinable):
-    1 - Σ(a-p)² / (Σa² - (Σa)²/n). Ref metrics.py:64."""
+    1 - Σ(a-p)² / (Σa² - (Σa)²/n). Ref metrics.py:64.
+
+    NULL when ``actual`` has zero variance in the group (one row, a
+    constant group, or no non-null value): R² is undefined there, and
+    the division would raise DIVIDE_BY_ZERO under ANSI."""
     a, p = to_col(actual).cast("double"), to_col(pred).cast("double")
     ss_res = F.sum((a - p) * (a - p))
     ss_tot = F.sum(a * a) - F.sum(a) * F.sum(a) / F.count(a)
-    return 1 - ss_res / ss_tot
+    return F.when((F.max(a) > F.min(a)) & (ss_tot > 0),
+                  1 - ss_res / ss_tot)
 
 
 def query_adj_r2(actual, pred, p: int) -> Column:
-    """Adjusted R² with p regressors. Ref metrics.py:84."""
+    """Adjusted R² with p regressors. Ref metrics.py:84. NULL where
+    `query_r2` is, and when n ≤ p + 1 (no residual degrees of freedom)."""
     a = to_col(actual)
     n = F.count(a).cast("double")
     r2 = query_r2(actual, pred)
-    return 1 - (1 - r2) * (n - 1) / (n - p - 1)
+    return F.when(n > p + 1, 1 - (1 - r2) * (n - 1) / (n - p - 1))
 
 
 def query_log_cosh(actual, pred, normalize: bool = True) -> Column:

@@ -22,9 +22,11 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 # --------------------------------------------------------------- exact dedup
@@ -73,13 +75,16 @@ def char_shingles(text, k: int = 12) -> Column:
 
 
 def hashed_char_shingles(text, k: int = 12) -> Column:
-    """Distinct xxhash64 values of the character k-grams of ``text`` —
-    `char_shingles` composed with the hash, but with `array_distinct`
-    running AFTER hashing, over longs instead of 12-char strings.
-    Identical result set (distinct k-grams → distinct longs at ~n²/2⁶⁴
-    collision odds — the same equivalence the Jaccard-on-hashes verify
-    already relies on) with cheaper dedup equality and no materialized
-    string array: measured ~15%% off the minhash shingle scan at sf1.0.
+    """Distinct xxhash64 values of the character k-grams of ``text``, in
+    first-occurrence order — `char_shingles` composed with the hash,
+    with `array_distinct` running AFTER hashing, over longs. Identical
+    result set (distinct k-grams → distinct longs at ~n²/2⁶⁴ collision
+    odds — the same equivalence the Jaccard-on-hashes verify relies on).
+
+    The interpreted reference for `shingle_minhash`'s ``sh``, which the
+    minhash plans use instead: a HOF lambda per k-gram is not codegen'd
+    (2.2 s against the kernel's 0.35 s on one core, see there). The
+    parity tests compare the two.
     """
     t = F.col(text) if isinstance(text, str) else text
     return F.array_distinct(
@@ -118,10 +123,14 @@ def jaccard_distinct(a: Column, b: Column) -> Column:
     |a∩b| / (|a| + |b| − |a∩b|) — ONE array_intersect instead of
     intersect + union, halving the hash work and skipping the union
     array allocation on the verify hot path (the same add-subtract
-    identity every SQL oracle uses)."""
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(a) + F.size(b) - inter
-    return F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
+    identity every SQL oracle uses). The intersection size is let-bound
+    (`_let`): the body references it three times, and unbound it was
+    computed up to three times per pair (measured on 923 verify pairs of
+    ~700-hash sets: 0.8 → 0.4 s of JVM CPU, same values)."""
+    n = F.size(a) + F.size(b)
+    return _let(F.size(F.array_intersect(a, b)).cast("double"),
+                lambda inter: F.when(n - inter == 0, F.lit(0.0))
+                .otherwise(inter / (n - inter)))
 
 
 # ------------------------------------------------------------------- minhash
@@ -139,83 +148,260 @@ def _let(bound: Column, body) -> Column:
     return F.element_at(F.transform(F.array(bound), body), 1)
 
 
-def minhash_band_hashes(hashes: Column, n_hashes: int = 96,
-                        bands: int = 32) -> Column:
-    """Banded MinHash from per-shingle base hashes → array<long> of band
-    hashes (one per band).
+#: XXH64 primes (Spark's `XXH64`, the hash behind ``F.xxhash64``)
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+#: ``F.xxhash64``'s seed — also its value for a NULL input
+_XXH_SEED = 42
+#: the four stripe accumulators' start values and the short-input start
+_XXH_V0 = [np.uint64((_XXH_SEED + c) % (1 << 64)) for c in (
+    int(_P1) + int(_P2), int(_P2), 0, -int(_P1))]
+_XXH_H0 = np.uint64(_XXH_SEED + int(_P5))
 
-    The O(n_hashes·|shingles|) permutation minima run as ONE vectorized
-    numpy pandas UDF over the already-JVM-hashed shingles — interpreted
-    higher-order lambdas cost ~0.5µs/element, which at 96×400 elements/row
-    dominates everything (measured 190s → ~4s at sf0.1 for the whole
-    near-dup query).
+#: text bytes per kernel chunk: bounds the per-window intermediates
+#: (~80 bytes per window, measured 26 MB peak at this size against 72 MB
+#: for one 855 KB chunk, at the same speed) whatever the Arrow batch holds
+_KERNEL_CHUNK_BYTES = 1 << 18
+
+
+def _rotl(x: "np.ndarray", r: int) -> "np.ndarray":
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _xxh_round(acc: "np.ndarray", lane: "np.ndarray") -> "np.ndarray":
+    return _rotl(acc + lane * _P2, 31) * _P1
+
+
+def _xxh64_windows(data: "np.ndarray", starts: "np.ndarray",
+                   n: int) -> "np.ndarray":
+    """XXH64 (seed 42) of the ``n``-byte windows of ``data`` (uint8) at
+    byte offsets ``starts`` — `XXH64.hashUnsafeBytes`, vectorized over
+    windows of ONE length so every window walks the same stripe / word /
+    tail schedule. Little-endian lane reads go through stride-1 views,
+    so no window is copied out."""
+    u64 = np.ndarray((max(len(data) - 7, 0),), "<u8", data, strides=(1,))
+    u32 = np.ndarray((max(len(data) - 3, 0),), "<u4", data, strides=(1,))
+    if n >= 32:
+        v = [np.full(len(starts), v0) for v0 in _XXH_V0]
+        for off in range(0, n - 31, 32):
+            for j in range(4):
+                v[j] = _xxh_round(v[j], u64[starts + (off + 8 * j)])
+        h = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        for j in range(4):
+            h = (h ^ _xxh_round(np.uint64(0), v[j])) * _P1 + _P4
+    else:
+        h = np.full(len(starts), _XXH_H0)
+    h += np.uint64(n)
+    off = n & ~31
+    while off + 8 <= n:
+        h ^= _xxh_round(np.uint64(0), u64[starts + off])
+        h = _rotl(h, 27) * _P1 + _P4
+        off += 8
+    if off + 4 <= n:
+        h ^= u32[starts + off].astype(np.uint64) * _P1
+        h = _rotl(h, 23) * _P2 + _P3
+        off += 4
+    for off in range(off, n):
+        h ^= data[starts + off].astype(np.uint64) * _P5
+        h = _rotl(h, 11) * _P1
+    h ^= h >> np.uint64(33)
+    h *= _P2
+    h ^= h >> np.uint64(29)
+    h *= _P3
+    h ^= h >> np.uint64(32)
+    return h
+
+
+def _kgram_hashes(data: "np.ndarray", offs: "np.ndarray",
+                  valid: "np.ndarray", k: int):
+    """Distinct k-gram hashes of the UTF-8 docs ``data[offs[i]:offs[i+1]]``
+    (``offs`` rebased to 0, int32): exactly `hashed_char_shingles`, values
+    and order. Windows are the Spark ``substring(t, i, k)`` calls for
+    i = 1..max(len−k+1, 1) over code points; a NULL doc gives [42]
+    (``xxhash64(NULL)``). Returns (flat uint64 hashes, int32 doc starts
+    into it); every doc has at least one hash."""
+    n_docs = len(offs) - 1
+    total = int(offs[-1])
+    is_cp = (data[:total] & 0xC0) != 0x80  # code-point lead bytes
+    cp_pos = np.append(np.flatnonzero(is_cp).astype(np.int32),
+                       np.int32(total))
+    cp_before = np.zeros(total + 1, dtype=np.int32)
+    np.cumsum(is_cp, dtype=np.int32, out=cp_before[1:])
+    first = cp_before[offs[:-1]]
+    n_cp = np.where(valid, cp_before[offs[1:]] - first, 0).astype(np.int32)
+    n_win = np.maximum(n_cp - (k - 1), 1)
+    wstart = np.zeros(n_docs + 1, dtype=np.int32)
+    np.cumsum(n_win, dtype=np.int32, out=wstart[1:])
+    doc = np.repeat(np.arange(n_docs, dtype=np.int32), n_win)
+    j = np.arange(wstart[-1], dtype=np.int32) - wstart[doc]
+    lo = first[doc] + j
+    hi = lo + np.minimum(k, n_cp[doc] - j)
+    starts, lens = cp_pos[lo], cp_pos[hi] - cp_pos[lo]
+    del lo, hi, j
+    h = np.empty(len(starts), dtype=np.uint64)
+    order = np.argsort(lens, kind="stable")
+    lens_sorted = lens[order]
+    cuts = np.flatnonzero(np.diff(lens_sorted)) + 1
+    for a, b in zip(np.r_[0, cuts], np.r_[cuts, len(order)]):
+        idx = order[a:b]
+        h[idx] = _xxh64_windows(data, starts[idx], int(lens_sorted[a]))
+    h[wstart[:-1][~valid]] = np.uint64(_XXH_SEED)
+    # array_distinct: the first occurrence of each (doc, hash), in place.
+    # A stable sort on the hash keeps equal hashes in window order, which
+    # is doc order, so each (doc, hash) run starts at its first window.
+    order = np.argsort(h, kind="stable")
+    hs, ds = h[order], doc[order]
+    first_seen = np.ones(len(order), dtype=bool)
+    first_seen[1:] = (hs[1:] != hs[:-1]) | (ds[1:] != ds[:-1])
+    keep = np.zeros(len(order), dtype=bool)
+    keep[order[first_seen]] = True
+    kept_per_doc = np.bincount(doc[keep], minlength=n_docs)
+    dstart = np.zeros(n_docs, dtype=np.int32)
+    np.cumsum(kept_per_doc[:-1], dtype=np.int32, out=dstart[1:])
+    return h[keep], dstart
+
+
+def _band_flat(hm: "np.ndarray", starts: "np.ndarray", n_docs: int,
+               n_hashes: int, bands: int) -> "np.ndarray":
+    """Band hashes of docs stored flat: doc i owns ``hm[starts[i]:
+    starts[i+1]]`` (uint64 shingle hashes; an empty doc bands as the
+    all-zero signature). Returns (n_docs × bands) uint64.
 
     Hash family: x ↦ a·x + b mod 2⁶⁴ with odd a — a bijection of the
     (already-uniform) xxhash64 shingle values, i.e. a valid random
     permutation for MinHash, with NO modulo in the hot loop (integer
     wrap IS the mod; measured ~2× over the mod-p family). Exact integer
-    arithmetic → bit-identical results on every platform. The hash family
-    only shapes candidate recall; output pairs are exact-Jaccard verified.
-    """
-    @pandas_udf("array<long>")
-    def _udf(hs: "pd.Series") -> "pd.Series":
-        out = minhash_bands_batch(list(hs), n_hashes, bands)
-        return pd.Series(list(out))
-
-    return _udf(hashes)
+    arithmetic → bit-identical results on every platform. The hash
+    family only shapes candidate recall; output pairs are exact-Jaccard
+    verified."""
+    rows_per_band = n_hashes // bands
+    rng = np.random.default_rng(0xD5D5)
+    mul = rng.integers(0, 1 << 64, size=n_hashes, dtype=np.uint64) | np.uint64(1)
+    add = rng.integers(0, 1 << 64, size=n_hashes, dtype=np.uint64)
+    ends = np.append(starts[1:], len(hm)) if n_docs else starts
+    nonempty = ends > starts
+    sig = np.zeros((n_docs, n_hashes), dtype=np.uint64)
+    if nonempty.any():
+        at = starts[nonempty]
+        for i in range(n_hashes):
+            perm = mul[i] * hm + add[i]  # wraps mod 2^64: bijective, odd a
+            sig[nonempty, i] = np.minimum.reduceat(perm, at)
+    # band hash: wrapping polynomial fold of the band's minima
+    out = np.zeros((n_docs, bands), dtype=np.uint64)
+    for b in range(bands):
+        acc = np.zeros(n_docs, dtype=np.uint64)
+        for r in range(rows_per_band):
+            acc = acc * np.uint64(1_000_003) + sig[:, b * rows_per_band + r]
+        out[:, b] = acc
+    return out
 
 
 def minhash_bands_batch(arrays, n_hashes: int = 96,
                         bands: int = 32) -> "np.ndarray":
-    """The numpy kernel behind minhash_band_hashes' UDF, exposed at
-    module level so the banding invariants (shingle-order independence,
-    batch-boundary determinism, identical-set band equality — the
-    recall floor for exact duplicates) are directly property-testable
-    without a JVM. ``arrays`` is a sequence of int64 shingle-hash
-    arrays (one per doc); returns an (rows × bands) int64 array of
-    band hashes. Pure code move from the r8 UDF body — expression for
-    expression, so band hashes are bit-identical to every prior round."""
-    rows_per_band = n_hashes // bands
-    rng = np.random.default_rng(0xD5D5)
-    pa = rng.integers(0, 1 << 64, size=n_hashes, dtype=np.uint64) | np.uint64(1)
-    pb = rng.integers(0, 1 << 64, size=n_hashes, dtype=np.uint64)
+    """Banded MinHash of per-doc shingle-hash arrays: ``arrays`` is a
+    sequence of int64 arrays (one per doc); returns an (rows × bands)
+    int64 array of band hashes, the values `shingle_minhash` stores in
+    ``bands``. Exposed so the banding invariants (shingle-order
+    independence, batch-boundary determinism, identical-set band
+    equality — the recall floor for exact duplicates) are directly
+    property-testable without a JVM."""
     lens = np.array([len(v) for v in arrays], dtype=np.int64)
-    total = int(lens.sum())
-    if total == 0:
-        return np.zeros((len(arrays), bands), dtype=np.int64)
-    flat = np.empty(total, dtype=np.int64)
-    pos = 0
-    for v in arrays:
-        n = len(v)
-        flat[pos:pos + n] = v
-        pos += n
-    hm = flat.view(np.uint64)
     starts = np.zeros(len(arrays), dtype=np.int64)
     np.cumsum(lens[:-1], out=starts[1:])
-    nonempty = lens > 0
-    sig = np.zeros((len(arrays), n_hashes), dtype=np.uint64)
-    for i in range(n_hashes):
-        perm = pa[i] * hm + pb[i]  # wraps mod 2^64: bijective, odd a
-        mins = np.minimum.reduceat(perm, starts[nonempty]) \
-            if nonempty.any() else np.empty(0, dtype=np.uint64)
-        sig[nonempty, i] = mins
-    # band hash: wrapping polynomial fold of the band's minima
-    out = np.zeros((len(arrays), bands), dtype=np.uint64)
-    for b in range(bands):
-        acc = np.zeros(len(arrays), dtype=np.uint64)
-        for r in range(rows_per_band):
-            acc = acc * np.uint64(1_000_003) + sig[:, b * rows_per_band + r]
-        out[:, b] = acc
-    return out.view(np.int64)
+    flat = (np.concatenate([np.asarray(v, dtype=np.int64) for v in arrays])
+            if len(arrays) else np.empty(0, dtype=np.int64))
+    return _band_flat(flat.view(np.uint64), starts, len(arrays),
+                      n_hashes, bands).view(np.int64)
+
+
+def shingle_minhash_batch(texts: "pa.Array", k: int = 12,
+                          n_hashes: int = 96, bands: int = 32):
+    """The kernel behind `shingle_minhash`, on one Arrow string array:
+    returns (flat int64 distinct k-gram hashes, int64 doc offsets into
+    it, len(texts)+1 of them, and the (rows × bands) int64 band hashes).
+
+    Reads the Arrow offsets and UTF-8 bytes zero-copy and works in
+    chunks of whole docs of about `_KERNEL_CHUNK_BYTES` text bytes, so
+    its intermediates stay bounded and int32 whatever the batch size.
+    Per doc the result depends on that doc alone, so it does not change
+    with where Arrow batches or chunks split."""
+    n = len(texts)
+    if n == 0:
+        return (np.empty(0, np.int64), np.zeros(1, np.int64),
+                np.empty((0, bands), np.int64))
+    if pa.types.is_large_string(texts.type):
+        texts = texts.cast(pa.string())
+    _, ob, db = texts.buffers()
+    offs = np.frombuffer(ob, dtype=np.int32, count=n + 1, offset=4 * texts.offset)
+    data = (np.frombuffer(db, dtype=np.uint8) if db is not None
+            else np.zeros(0, np.uint8))
+    valid = (texts.is_valid().to_numpy(zero_copy_only=False) if texts.null_count
+             else np.ones(n, dtype=bool))
+    flats, starts, band_parts, a, pos = [], [], [], 0, 0
+    while a < n:  # whole docs, ~_KERNEL_CHUNK_BYTES each
+        b = max(a + 1, int(np.searchsorted(
+            offs, int(offs[a]) + _KERNEL_CHUNK_BYTES, side="right")) - 1)
+        h, dstart = _kgram_hashes(data[offs[a]:offs[b]], offs[a:b + 1] - offs[a],
+                                  valid[a:b], k)
+        flats.append(h)
+        starts.append(dstart + pos)
+        band_parts.append(_band_flat(h, dstart, b - a, n_hashes, bands))
+        a, pos = b, pos + len(h)
+    return (np.concatenate(flats).view(np.int64),
+            np.append(np.concatenate(starts), pos).astype(np.int64),
+            np.vstack(band_parts).view(np.int64))
+
+
+#: `shingle_minhash`'s result: the distinct k-gram hashes (the ``__sh``
+#: shingle set) and the band hashes (``__bands``)
+_SH_BANDS = StructType([
+    StructField("sh", ArrayType(LongType(), False), False),
+    StructField("bands", ArrayType(LongType(), False), False),
+])
+
+
+def shingle_minhash(text, k: int = 12, n_hashes: int = 96,
+                    bands: int = 32) -> Column:
+    """Distinct char-k-gram hashes AND banded MinHash of ``text`` in ONE
+    vectorized Arrow pass → struct<sh: array<long>, bands: array<long>>.
+
+    ``sh`` equals `hashed_char_shingles(text, k)` bit for bit, values and
+    order (the parity tests compare them); ``bands`` is
+    `minhash_bands_batch` of it. The k-gram windows are found and
+    XXH64-hashed in numpy over the Arrow UTF-8 buffers
+    (`shingle_minhash_batch`) instead of an interpreted JVM
+    ``transform`` lambda (HOF lambdas are not codegen'd). Measured on
+    one core over 1200 docs (855k chars) at k=12: the kernel takes
+    0.35 s with banding, 0.6–0.8 s end to end through the UDF; the
+    lambda alone took 2.2 s, before banding."""
+    @arrow_udf(_SH_BANDS)
+    def _udf(texts: "pa.Array") -> "pa.Array":
+        flat, offsets, band = shingle_minhash_batch(texts, k, n_hashes, bands)
+        n = len(texts)
+        item = pa.field("item", pa.int64(), nullable=False)
+        sh = pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()), pa.array(flat),
+            type=pa.list_(item))
+        bh = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, n * bands + 1, bands, dtype=np.int32)),
+            pa.array(band.reshape(-1)), type=pa.list_(item))
+        return pa.StructArray.from_arrays(
+            [sh, bh], fields=[pa.field("sh", sh.type, nullable=False),
+                              pa.field("bands", bh.type, nullable=False)])
+
+    return _udf(F.col(text) if isinstance(text, str) else text)
 
 
 def _minhash_base(df: DataFrame, id_col: str, text_col: str,
                   shingle_k: int, n_hashes: int, bands: int) -> DataFrame:
-    """The pinned (__id, __sh, __bands) frame every minhash consumer
-    shares: shingle hashes AND band hashes materialize in ONE pass over
-    the text scan, so the banding stage never re-reads (or re-Arrow-
-    transfers) the multi-hundred-MB shingle cache — measured ~0.9 s off
-    the 100k-doc probe vs banding the pinned frame in a second pass.
+    """The pinned (__id, __th, __sh, __bands) frame every minhash
+    consumer shares: shingle hashes AND band hashes come out of ONE
+    Arrow kernel call per batch (`shingle_minhash`), so the text crosses
+    into Python once and the banding never re-reads the shingle cache.
+    ``__th`` (the text's own xxhash64) stays a JVM expression.
 
     Pinned (shared LRU registry — evicted by later queries, not
     session-lifetime): banding and BOTH sides of the verify join would
@@ -234,9 +420,9 @@ def _minhash_base(df: DataFrame, id_col: str, text_col: str,
         # (within-pairs, candidate h-filter) never re-scans the corpus
         F.xxhash64(F.col(text_col) if isinstance(text_col, str)
                    else text_col).alias("__th"),
-        hashed_char_shingles(text_col, shingle_k).alias("__sh"),
-    ).withColumn(
-        "__bands", minhash_band_hashes(F.col("__sh"), n_hashes, bands))),
+        shingle_minhash(text_col, shingle_k, n_hashes, bands).alias("__m"),
+    ).select("__id", "__th", F.col("__m.sh").alias("__sh"),
+             F.col("__m.bands").alias("__bands"))),
         "_mh", f"{shingle_k}/{n_hashes}/{bands}")
 
 
@@ -496,10 +682,13 @@ _VERIFY_SHJ_CAP = int(os.environ.get("SPARK_GRAFT_VERIFY_SHJ_CAP",
 
 
 def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
-                  prune: "bool | str" = "auto") -> DataFrame:
+                  prune: "bool | str" = "auto",
+                  distinct_text: bool = False) -> DataFrame:
     """Exact-Jaccard verification of candidate id pairs against the
-    pinned shingle sets — the kernel both `near_dup_pairs` branches
-    share. Output: (id_a, id_b, jaccard) with jaccard ≥ threshold.
+    pinned shingle sets — the kernel every `near_dup_pairs` branch
+    shares. Output: (id_a, id_b, jaccard) with jaccard ≥ threshold.
+    ``distinct_text=True`` also drops pairs of identical texts (equal
+    ``__th``), read from the same joined rows — no extra join.
 
     Scale regime (``prune="auto"``: engaged when the corpus
     projection's Catalyst size estimate exceeds `_VERIFY_EAGER_MIN_MB`
@@ -538,18 +727,17 @@ def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
     concurrent redundant leaf computes it prevents are free on idle
     cores.
     """
-    sh = base.select(F.col("__id"), F.col("__sh"))
+    sh = base.select("__id", "__sh", *(["__th"] if distinct_text else []))
     engage = (_plan_size_mb(base) > _VERIFY_EAGER_MIN_MB
               if prune == "auto" else bool(prune))
     if engage:
         from .._utils import pin
 
-        # materialize the base pin FIRST: cand's own plan reads it
-        # from up to 3 leaf legs (band explode + both sides of the
-        # identical-text filter), and against a cold cache AQE runs
-        # them concurrently — each recomputing the full shingle+band
-        # pass (3 × 28.5 s at the 1M-doc spot). One pass, then the
-        # candidate pipeline reads the cache.
+        # materialize the base pin FIRST: cand's plan reads it through
+        # the band explode while the verify joins read it again, and
+        # against a cold cache AQE runs the legs concurrently — each
+        # recomputing the full shingle+band pass (3 × 28.5 s at the
+        # 1M-doc spot). One pass, then every leg reads the cache.
         #
         # r14: at engaged scale the base lives DISK_ONLY. An in-memory
         # cache of the corpus-sized shingle frame (2.4 GB at the 1M-doc
@@ -608,12 +796,13 @@ def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
         # UNABLE_TO_ACQUIRE_MEMORY where the fat path merely spilled.
         n_fat = int(min(4096, max(32, _plan_size_mb(sh) * 2 // 16)))
         sh = sh.repartition(n_fat, "__id")
-    joined = (
-        cand.join(sh.withColumnRenamed("__id", "id_a")
-                    .withColumnRenamed("__sh", "__sh_a"), "id_a")
-            .join(sh.withColumnRenamed("__id", "id_b")
-                    .withColumnRenamed("__sh", "__sh_b"), "id_b")
-    )
+    def side(s: str) -> DataFrame:  # id_<s>, __sh_<s>[, __th_<s>]
+        return sh.select(F.col("__id").alias("id_" + s),
+                         *[F.col(c).alias(f"{c}_{s}") for c in sh.columns[1:]])
+
+    joined = cand.join(side("a"), "id_a").join(side("b"), "id_b")
+    if distinct_text:
+        joined = joined.where(F.col("__th_a") != F.col("__th_b"))
     return (
         joined.select(
             "id_a", "id_b",
@@ -660,8 +849,8 @@ def near_dup_pairs(
     """MinHash-LSH near-duplicate pairs, exact-Jaccard verified.
 
     Pipeline: shingle hashes + band hashes in ONE pinned pass
-    (`_minhash_base`: JVM k-gram hashing feeding the vectorized numpy
-    banding UDF) → banded LSH (one shuffle) → candidate pairs → join
+    (`_minhash_base`: one vectorized Arrow kernel hashes the k-grams
+    and bands them) → banded LSH (one shuffle) → candidate pairs → join
     back for shingle sets → exact Jaccard filter. The hash functions
     only generate candidates; the output is defined purely by
     Jaccard ≥ threshold, so it is engine-independent (the SQL oracle
@@ -710,22 +899,14 @@ def near_dup_pairs(
                              shingle_k, n_hashes, bands)
         # id→text-hash map and within-pairs read the PIN (the __th
         # column rides it) — zero extra corpus scans on this branch
-        keyed = base.select(F.col("__id").alias("__m"),
-                            F.col("__th").alias("__h"))
-        within = _exact_within_pairs(keyed)
+        within = _exact_within_pairs(base.select(
+            F.col("__id").alias("__m"), F.col("__th").alias("__h")))
         cand = _bucket_pairs(_lsh_buckets(base, max_bucket)).distinct()
         # identical-text candidates route through `within` (and an
         # over-cap identical cluster that never reaches `cand` still
-        # does) — drop them here so nothing verifies or emits twice
-        cand = (
-            cand.join(keyed.select(F.col("__m").alias("id_a"),
-                                   F.col("__h").alias("__ha")), "id_a")
-            .join(keyed.select(F.col("__m").alias("id_b"),
-                               F.col("__h").alias("__hb")), "id_b")
-            .where(F.col("__ha") != F.col("__hb"))
-            .select("id_a", "id_b")
-        )
-        return _verify_pairs(base, cand, threshold).unionByName(within)
+        # does) — the verify drops them so nothing emits twice
+        return _verify_pairs(base, cand, threshold,
+                             distinct_text=True).unionByName(within)
 
     # collapse→mine→expand: one (hash, id, text) struct-min shuffle
     # builds the representative corpus (same construction as

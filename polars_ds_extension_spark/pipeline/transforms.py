@@ -111,7 +111,11 @@ class Impute(Transform):
 
 class Scale(Transform):
     """standard | minmax | robust (median/IQR) | center (mean-subtract
-    only, ref Blueprint.center) scaling. Ref transforms.py:173."""
+    only, ref Blueprint.center) scaling. Ref transforms.py:173.
+
+    A fitted spread of 0 — a constant column, or the undefined sample
+    std of a one-row fit — scales by 1, as sklearn does: the column is
+    centred, not divided by zero."""
 
     name = "scale"
 
@@ -144,18 +148,16 @@ class Scale(Transform):
             else:
                 raise ValueError(f"unknown method {method}")
         row = df.agg(*aggs).first()
-        self.params = {c: [float(row[f"{c}__a"]), float(row[f"{c}__b"])] for c in cols}
+        self.params = {c: [float(row[f"{c}__a"]), float(row[f"{c}__b"] or 0.0)]
+                       for c in cols}
         return self
 
     def transform(self, df: DataFrame) -> DataFrame:
         method = self.kwargs["method"]
         for c, (a, b) in self.params.items():
-            cc = F.col(c).cast("double")
-            if method == "minmax":
-                expr = (cc - F.lit(a)) / F.lit(b - a)
-            else:
-                expr = (cc - F.lit(a)) / F.lit(b)
-            df = df.withColumn(c, expr)
+            spread = b - a if method == "minmax" else b
+            df = df.withColumn(
+                c, (F.col(c).cast("double") - F.lit(a)) / F.lit(spread or 1.0))
         return df
 
 

@@ -195,6 +195,21 @@ _STALE = frozenset({
     # vocab cap (catalog plans unchanged — all callers cap).
     "curation_pipeline_v3", "pagerank", "pagerank_personalized",
     "perplexity_gate", "bigram_lm",
+    # every query that builds a minhash base: k-grams are hashed and
+    # banded by one Arrow kernel (dedup.shingle_minhash) instead of a
+    # JVM transform lambda plus a banding UDF — shingle and band hashes
+    # bit-identical (parity tests) — and near_dup_pairs' uncollapsed
+    # branch filters identical-text candidates inside the verify join
+    # (same pairs, two fewer joins); jaccard_distinct let-binds its
+    # intersection (same values). index_update and
+    # prebuilt_index_dedup, listed above, build one too.
+    "dup_cluster_downsample", "dup_cluster_sizes", "incremental_dedup",
+    "leakage_safe_split", "near_dup_cluster_dedup", "near_dup_minhash",
+    "stream_decontaminate",
+    # query_r2 / query_adj_r2 return NULL on a zero-variance group and
+    # Scale divides by 1 on a zero spread (both raised DIVIDE_BY_ZERO
+    # under ANSI); values elsewhere unchanged.
+    "regression_metrics", "pipeline_transform",
 })
 
 

@@ -200,9 +200,9 @@ def stream_near_dup_flags(
     emitted set is engine-independent and SQL-oracle-checkable.
 
     Plan (all streaming-legal): stream docs shingle + band scan-side
-    (the same vectorized signature UDF as batch), two STREAM-STATIC
-    hash joins — candidates on (band, band_hash) against the
-    pre-banded reference (only ref ids travel), then shingle fetch by
+    (the same Arrow kernel as batch, `dedup.shingle_minhash`), two
+    STREAM-STATIC hash joins — candidates on (band, band_hash) against
+    the pre-banded reference (only ref ids travel), then shingle fetch by
     ref id for the exact verify — and a streaming dropDuplicates on
     the doc id so each contaminated doc emits once. State = the
     contaminated id set (8-byte keys), bounded by the stream's
@@ -211,15 +211,12 @@ def stream_near_dup_flags(
     Output stream: (id_col,) of contaminated docs, append mode.
     """
     from .._utils import pin, spread
-    from ..operators.dedup import (char_shingles, jaccard_distinct,
-                                   minhash_band_hashes)
+    from ..operators.dedup import jaccard_distinct, shingle_minhash
 
     def _prep(df: DataFrame, idc: str, shc: str, bc: str) -> DataFrame:
-        sh = F.transform(char_shingles(F.col(text_col), shingle_k),
-                         lambda s: F.xxhash64(s))
-        out = df.select(F.col(id_col).alias(idc), sh.alias(shc))
-        return out.withColumn(
-            bc, minhash_band_hashes(F.col(shc), n_hashes, bands))
+        m = shingle_minhash(text_col, shingle_k, n_hashes, bands)
+        return df.select(F.col(id_col).alias(idc), m.alias("__m")).select(
+            idc, F.col("__m.sh").alias(shc), F.col("__m.bands").alias(bc))
 
     # PIN the prepped reference: stream-static joins re-execute the
     # static subtree EVERY micro-batch, and this plan reads it from two

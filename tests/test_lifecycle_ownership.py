@@ -31,3 +31,19 @@ def test_lifecycle_helpers_live_only_in_utils():
         if re.search(pattern, path.read_text(encoding="utf-8"))
     ]
     assert not offenders, offenders
+
+
+def test_interpreted_kgram_hashing_lives_only_in_hashed_char_shingles():
+    """A JVM lambda that xxhash64-es each char k-gram (a substring window,
+    or each element of `char_shingles`) is not codegen'd; the minhash
+    plans hash k-grams in the `shingle_minhash` Arrow kernel. The
+    interpreted form stays only as `hashed_char_shingles`, the reference
+    the parity tests compare the kernel against."""
+    found = []
+    kgram_hash = r"xxhash64\(F\.substring|transform\(\s*char_shingles"
+    for path in sorted(PKG.rglob("*.py")):
+        text = path.read_text(encoding="utf-8")
+        for m in re.finditer(kgram_hash, text):
+            defs = re.findall(r"^def (\w+)", text[:m.start()], re.M)
+            found.append((str(path.relative_to(PKG)), defs[-1] if defs else None))
+    assert found == [("operators/dedup.py", "hashed_char_shingles")], found

@@ -23,6 +23,25 @@ def df(spark):
     }))
 
 
+
+def test_r2_zero_variance_groups_are_null(spark):
+    """A one-row or constant group has no variance in ``actual``: R² and
+    adjusted R² are NULL there (not DIVIDE_BY_ZERO under ANSI), while a
+    varying group still gets its value."""
+    sdf = spark.createDataFrame(
+        [("one", 3.0, 2.0), ("const", 5.0, 4.0), ("const", 5.0, 6.0),
+         ("const", 5.0, 5.0), ("vary", 1.0, 1.5), ("vary", 2.0, 2.0),
+         ("vary", 4.0, 3.5), ("vary", 7.0, 7.0)], "g string, a double, p double")
+    out = {r["g"]: r for r in sdf.groupBy("g").agg(
+        M.query_r2("a", "p").alias("r2"),
+        M.query_adj_r2("a", "p", 1).alias("adj")).collect()}
+    assert out["one"]["r2"] is None and out["one"]["adj"] is None
+    assert out["const"]["r2"] is None and out["const"]["adj"] is None
+    a, p = np.array([1.0, 2, 4, 7]), np.array([1.5, 2, 3.5, 7])
+    r2 = 1 - ((a - p) ** 2).sum() / ((a - a.mean()) ** 2).sum()
+    assert out["vary"]["r2"] == pytest.approx(r2, rel=1e-9)
+    assert out["vary"]["adj"] == pytest.approx(1 - (1 - r2) * 3 / 2, rel=1e-9)
+
 def test_regression_metrics(spark, df):
     row = df.agg(
         M.query_r2("a", "pred").alias("r2"),

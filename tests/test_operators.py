@@ -34,6 +34,42 @@ def test_char_shingles_and_jaccard(spark):
     assert row["j"] == pytest.approx(3 / 5)
 
 
+_KGRAM_TEXTS = [
+    None, "", "a", "ab", "abcdefghijk", "abcdefghijkl", "abcdefghijklm",
+    "héllo wörld, ünïcode", "中文文本的近重复检测" * 3, "emoji 😀🎉 four-byte 🚀" * 2,
+    "e\u0301 combining", "x" * 100, "abab" * 30, "the quick brown fox " * 8,
+]
+
+
+def test_shingle_minhash_matches_spark_reference(spark):
+    """The Arrow kernel's ``sh`` equals Spark's interpreted
+    `hashed_char_shingles` — values and order — and its ``bands`` equal
+    `minhash_bands_batch` of those shingles (the previous pipeline), at
+    k=3, 12 and 40 (windows of ≥32 bytes exercise XXH64's stripe loop),
+    whatever the Arrow batch size."""
+    sdf = spark.createDataFrame(list(enumerate(_KGRAM_TEXTS)), "id long, t string")
+    assert sdf.select(F.xxhash64(F.lit("Spark"))).first()[0] == -4294468057691064905
+    for k in (3, 12, 40):
+        q = sdf.select("id", D.hashed_char_shingles("t", k).alias("ref"),
+                       D.shingle_minhash("t", k, 24, 8).alias("m")).orderBy("id")
+        rows = q.collect()
+        for r in rows:
+            assert list(r["m"]["sh"]) == list(r["ref"]), (k, _KGRAM_TEXTS[r["id"]])
+        want = D.minhash_bands_batch(
+            [np.array(r["ref"], np.int64) for r in rows], 24, 8)
+        assert np.array_equal(np.array([r["m"]["bands"] for r in rows]), want)
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, "3")
+        try:
+            assert q.collect() == rows
+        finally:
+            spark.conf.set(conf, old)
+    null_row = sdf.where(F.col("t").isNull()).select(
+        D.shingle_minhash("t").alias("m")).first()["m"]
+    assert list(null_row["sh"]) == [42] and len(null_row["bands"]) == 32
+
+
 def test_strip_boilerplate_floors(spark):
     # Group g1: 4 docs sharing a header (freq 1.0 -> stripped); a promo
     # line on 2 of 4 docs (doc_freq 2 < min_docs=3 -> kept); unique

@@ -39,6 +39,18 @@ def test_minmax_and_winsorize(df):
     assert w["z"].max() == 40.0 and w["z"].min() == 20.0
 
 
+
+@pytest.mark.parametrize("method", ["standard", "minmax", "robust"])
+def test_scale_zero_spread_scales_by_one(spark, method):
+    """A constant column (spread 0) and a one-row fit (undefined sample
+    std) scale by 1: values are centred, not divided by zero."""
+    const = spark.createDataFrame([(3.0,), (3.0,), (3.0,)], "z double")
+    out = Pipeline([Scale(["z"], method)]).fit(const).transform(const)
+    assert [r["z"] for r in out.collect()] == [0.0, 0.0, 0.0]
+    one = spark.createDataFrame([(7.0,)], "z double")
+    fitted = Pipeline([Scale(["z"], method)]).fit(one)
+    assert [r["z"] for r in fitted.transform(one).collect()] == [0.0]
+
 def test_one_hot_and_ordinal(df):
     out = Pipeline([OneHot(["cat"])]).fit(df).transform(df).toPandas()
     assert {"cat_a", "cat_b", "cat_c"} <= set(out.columns)

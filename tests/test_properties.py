@@ -131,6 +131,129 @@ def test_minhash_identical_sets_share_every_band(doc, shape):
     assert np.array_equal(out[0], out[2])
 
 
+# ------------------------------------ k-gram hashing kernel (pure numpy)
+
+import pyarrow as pa
+
+from polars_ds_extension_spark.operators import dedup as _dedup
+
+_M64 = (1 << 64) - 1
+_XP1, _XP2, _XP3, _XP4, _XP5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5)
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xround(acc: int, lane: int) -> int:
+    return _rotl64((acc + lane * _XP2) & _M64, 31) * _XP1 & _M64
+
+
+def _xxh64_ref(b: bytes, seed: int = 42) -> int:
+    """Scalar XXH64 as signed int64 — the textbook algorithm, one byte
+    string at a time; Spark's ``xxhash64`` of a string is this with
+    seed 42."""
+    n, i = len(b), 0
+    if n >= 32:
+        v = [(seed + _XP1 + _XP2) & _M64, (seed + _XP2) & _M64, seed,
+             (seed - _XP1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _xround(v[j], int.from_bytes(b[i + 8 * j:i + 8 * j + 8],
+                                                    "little"))
+            i += 32
+        h = (_rotl64(v[0], 1) + _rotl64(v[1], 7) + _rotl64(v[2], 12)
+             + _rotl64(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xround(0, x)) * _XP1 + _XP4) & _M64
+    else:
+        h = (seed + _XP5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xround(0, int.from_bytes(b[i:i + 8], "little"))
+        h = (_rotl64(h, 27) * _XP1 + _XP4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(b[i:i + 4], "little") * _XP1 & _M64
+        h = (_rotl64(h, 23) * _XP2 + _XP3) & _M64
+        i += 4
+    for c in b[i:]:
+        h ^= c * _XP5 & _M64
+        h = _rotl64(h, 11) * _XP1 & _M64
+    h ^= h >> 33
+    h = h * _XP2 & _M64
+    h ^= h >> 29
+    h = h * _XP3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def _kgrams_ref(t, k: int) -> list:
+    """`hashed_char_shingles` in plain Python: hash substring(t, i, k)
+    over code points for i = 1..max(len−k+1, 1), distinct in
+    first-occurrence order; NULL → [xxhash64(NULL)] = [42]."""
+    if t is None:
+        return [42]
+    hs = [_xxh64_ref(t[i:i + k].encode()) for i in range(max(len(t) - k + 1, 1))]
+    return list(dict.fromkeys(hs))
+
+
+# no surrogates (not encodable as UTF-8); 1-4 byte code points
+DOC = st.one_of(st.none(), st.text(
+    alphabet=st.characters(exclude_categories=("Cs",)), max_size=60))
+
+
+def test_xxh64_ref_known_values():
+    """The reference itself: XXH64's published vectors (seed 0) and
+    Spark's ``xxhash64`` of '' and 'Spark' (seed 42)."""
+    assert _xxh64_ref(b"", 0) == 0xEF46DB3751D8E999 - (1 << 64)
+    assert _xxh64_ref(b"abc", 0) == 0x44BC2CF5AD770999
+    assert _xxh64_ref(b"Spark") == -4294468057691064905
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(DOC, min_size=1, max_size=12),
+       st.sampled_from([1, 3, 12, 40]))
+def test_shingle_minhash_batch_matches_reference(docs, k):
+    """Values AND order of every doc's k-gram hashes equal the scalar
+    reference (null, empty, shorter-than-k and multi-byte docs included;
+    k=40 puts ≥32-byte windows through XXH64's stripe loop), and the
+    bands equal `minhash_bands_batch` of those hashes."""
+    flat, offs, bands = _dedup.shingle_minhash_batch(
+        pa.array(docs, pa.string()), k, 24, 8)
+    ref = [_kgrams_ref(t, k) for t in docs]
+    assert offs[0] == 0 and len(offs) == len(docs) + 1
+    assert [flat[a:b].tolist() for a, b in zip(offs[:-1], offs[1:])] == ref
+    assert np.array_equal(bands, _dedup.minhash_bands_batch(
+        [np.array(r, np.int64) for r in ref], 24, 8))
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(DOC, min_size=1, max_size=12),
+       st.integers(min_value=0, max_value=12),
+       st.sampled_from([1, 7, 64]))
+def test_shingle_minhash_batch_split_and_chunk_invariance(docs, cut, chunk):
+    """Per-doc results do not depend on where Arrow batches split, on an
+    array slice's offset, or on the kernel's chunk size."""
+    arr = pa.array(docs, pa.string())
+    flat, offs, bands = _dedup.shingle_minhash_batch(arr, 12, 24, 8)
+    cut = min(cut, len(docs))
+    parts = [_dedup.shingle_minhash_batch(arr.slice(a, b - a), 12, 24, 8)
+             for a, b in ((0, cut), (cut, len(docs)))]
+    assert np.array_equal(np.concatenate([p[0] for p in parts]), flat)
+    assert np.array_equal(np.vstack([p[2] for p in parts]), bands)
+    old = _dedup._KERNEL_CHUNK_BYTES
+    _dedup._KERNEL_CHUNK_BYTES = chunk
+    try:
+        small = _dedup.shingle_minhash_batch(arr, 12, 24, 8)
+    finally:
+        _dedup._KERNEL_CHUNK_BYTES = old
+    for got, want in zip(small, (flat, offs, bands)):
+        assert np.array_equal(got, want)
+
+
 VEC = st.lists(st.floats(min_value=-1e6, max_value=1e6,
                          allow_nan=False, allow_infinity=False,
                          width=64),
