@@ -17,7 +17,6 @@ shaped for the 100 TB case:
 
 from __future__ import annotations
 
-import os
 from typing import Sequence
 
 import numpy as np
@@ -505,57 +504,73 @@ def _bucket_pairs(buckets: DataFrame) -> DataFrame:
     ).alias("p")).select("p.id_a", "p.id_b")
 
 
-def _collapse_rule(n: int, nd: int) -> bool:
-    """THE gate rule, shared by every path that measures the exact-dup
-    rate (the scan-fused one in near_dup_canonical_dedup included):
-    collapse when duplicated rows exceed 10% of the corpus. One place,
-    so the diagnostic twin can never desynchronize from the plans."""
-    return bool(n) and (n - nd) / n > 0.10
+def _lsh_candidates(base: DataFrame, max_bucket: int) -> DataFrame:
+    """The distinct (id_a < id_b) candidate pairs of a minhash base's
+    capped LSH buckets — the one candidate frame the banded plans
+    verify and `lsh_candidate_stats` counts."""
+    return _bucket_pairs(_lsh_buckets(base, max_bucket)).distinct()
 
 
-def _dup_rate_gate(df: DataFrame, text_col: str) -> "tuple[bool, int]":
+def _banded_pairs(df: DataFrame, id_col: str, text_col: str,
+                  threshold: float, shingle_k: int, n_hashes: int,
+                  bands: int, max_bucket: int) -> DataFrame:
+    """The pure banded plan: minhash base → LSH candidates → exact
+    Jaccard verify, (id_a, id_b, jaccard). Recall is cap-limited on
+    everything, identical texts included — the callers that need those
+    pairs cap-independently carry their own exact tier."""
+    base = _minhash_base(df, id_col, text_col, shingle_k, n_hashes, bands)
+    return _verify_pairs(base, _lsh_candidates(base, max_bucket), threshold)
+
+
+def _dup_rate_gate(df: DataFrame, text_col: str,
+                   hashed=None) -> "tuple[bool, int]":
     """The shared adaptive-collapse gate: ONE count + approx-distinct
-    (HLL) aggregation measures the exact-dup rate; collapse when > 10%
-    (`_collapse_rule`). Approx, not exact — a 5% rsd cannot flip a
-    decision that only matters when the true rate is far from the 10%
-    line. Returns (collapse, n_rows). Every caller that claims to
-    mirror the gate (`lsh_candidate_stats`, `near_dup_pairs`,
-    `near_dup_canonical_dedup`) MUST route through this helper or
-    `_collapse_rule` so the diagnostic can never desynchronize from
-    the plans it measures.
+    (HLL) aggregation measures the exact-dup rate; collapse when
+    duplicated rows exceed 10% of the corpus. Approx, not exact — a 5%
+    rsd cannot flip a decision that only matters when the true rate is
+    far from the 10% line. Returns (collapse, n_rows). Every gated
+    operator (`lsh_candidate_stats`, `near_dup_pairs`, the
+    `_near_dup_edge_set` family) routes through this one rule, so the
+    diagnostic can never desynchronize from the plans it measures.
 
-    Memoized per (frame object, text column) under `_gate_key`:
-    composed pipelines that run several gated operators over the SAME
-    frame pay the corpus scan once. The key includes the column — two
-    columns of one frame (raw vs normalized text) can sit on opposite
-    sides of the gate. Both gate branches are value-identical by
-    contract, so a stale hit can only cost time, never correctness."""
+    ``hashed``: a thunk returning a frame of ``df``'s text hashes
+    (``__h``) to measure instead — a caller that pins it for its own
+    joins fuses the gate into that scan. Called only on a memo miss.
+
+    Memoized per (frame object, text column): composed pipelines that
+    run several gated operators over the SAME frame pay the corpus scan
+    once. The key includes the column — two columns of one frame (raw
+    vs normalized text) can sit on opposite sides of the gate. Both
+    gate branches are value-identical by contract, so a stale hit can
+    only cost time, never correctness."""
     from .._utils import memo
 
     def _measure():
-        n, nd = df.agg(
-            F.count(F.lit(1)),
-            F.approx_count_distinct(F.xxhash64(F.col(text_col)))).first()
-        return _collapse_rule(n, nd), int(n)
+        src, h = ((hashed(), F.col("__h")) if hashed is not None
+                  else (df, F.xxhash64(F.col(text_col))))
+        n, nd = src.agg(F.count(F.lit(1)), F.approx_count_distinct(h)).first()
+        return bool(n) and (n - nd) / n > 0.10, int(n)
 
-    return memo(df, _gate_key(text_col), _measure)
-
-
-def _gate_key(text_col: str) -> tuple:
-    return ("dup_rate", text_col)
+    return memo(df, ("dup_rate", text_col), _measure)
 
 
-def _rep_corpus(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _rep_corpus(df: DataFrame, id_col: str, text_col: str,
+                pinned: bool = False) -> DataFrame:
     """One representative (min id) row per distinct text via a single
-    (hash, id, text) struct-min shuffle — the shared collapse
-    construction (no corpus-vs-reps semi-join pass)."""
-    keyed_t = df.select(F.col(id_col).alias("__m"),
-                        F.col(text_col).alias("__t"),
-                        F.xxhash64(F.col(text_col)).alias("__h"))
-    return (keyed_t.groupBy("__h")
-            .agg(F.min(F.struct("__m", "__t")).alias("__r"))
-            .select(F.col("__r.__m").alias(id_col),
-                    F.col("__r.__t").alias(text_col)))
+    (hash, id, text) struct-min shuffle — the one collapse construction
+    (no corpus-vs-reps semi-join pass). Returns (id_col, text_col,
+    ``__h``): the text hash rides along for the caller's rep → member
+    joins. ``pinned`` pins the aggregation for callers that read the
+    reps from several subtrees."""
+    from .._utils import pin
+
+    rep = (df.select(F.col(id_col).alias("__m"),
+                     F.col(text_col).alias("__t"),
+                     F.xxhash64(F.col(text_col)).alias("__h"))
+           .groupBy("__h").agg(F.min(F.struct("__m", "__t")).alias("__r")))
+    return (pin(rep) if pinned else rep).select(
+        F.col("__r.__m").alias(id_col), F.col("__r.__t").alias(text_col),
+        "__h")
 
 
 def lsh_candidate_stats(
@@ -590,14 +605,14 @@ def lsh_candidate_stats(
     (``collapsed`` = 1, ``n_mined`` = number of reps), which is where
     the banding really happens.
 
-    Scope note: ``cand_slots``/``cand_distinct`` mirror the pure
-    banded plan (`near_dup_pairs(exact_pairs=False)` — what the corpus
-    dedup family runs). The default `exact_pairs=True` pairs plan
-    additionally filters identical-text candidates OUT of its verify
-    join (they route through the exact within-pairs aggregation), so
-    on an UNcollapsed corpus with exact-dup rate in (0, 10%] its
-    verify-join volume is slightly below the cand_distinct reported
-    here."""
+    Scope note: ``cand_distinct`` counts the same candidate frame
+    (`_lsh_candidates`) every banded plan verifies — the corpus dedup
+    family's `_banded_pairs` and both `near_dup_pairs` branches.
+    near_dup_pairs' UNcollapsed branch additionally filters
+    identical-text candidates OUT of its verify join (they route
+    through the exact within-pairs aggregation), so on a corpus with
+    exact-dup rate in (0, 10%] its verify volume is slightly below the
+    cand_distinct reported here."""
     from .._utils import unpin
 
     n_rows = None
@@ -620,8 +635,7 @@ def lsh_candidate_stats(
             .alias("cand_slots"),
         ).collect()[0]
         n_mined = base.count()
-        cand_distinct = _bucket_pairs(
-            _lsh_buckets(base, max_bucket)).distinct().count()
+        cand_distinct = _lsh_candidates(base, max_bucket).count()
     finally:
         unpin(base)  # the base never escapes this diagnostic
     if not collapse:
@@ -674,19 +688,18 @@ def _plan_size_mb(df: DataFrame) -> float:
 #: PROVABLY fit per-task memory (forcing SHJ with a too-big build fails
 #: outright — "Can't acquire … bytes to build hash relation" — it does
 #: not degrade). 20M 16-byte pair rows ≈ 1 GB total build across tasks,
-#: calibrated on the 32-thread/8g test host; env-overridable so
-#: constrained deployments can lower it without editing library code
-#: (r13 ADVICE).
-_VERIFY_SHJ_CAP = int(os.environ.get("SPARK_GRAFT_VERIFY_SHJ_CAP",
-                                     "20000000"))
+#: calibrated on a 32-thread host with 8 GB of executor memory.
+_VERIFY_SHJ_CAP = 20_000_000
 
 
 def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
                   prune: "bool | str" = "auto",
                   distinct_text: bool = False) -> DataFrame:
     """Exact-Jaccard verification of candidate id pairs against the
-    pinned shingle sets — the kernel every `near_dup_pairs` branch
-    shares. Output: (id_a, id_b, jaccard) with jaccard ≥ threshold.
+    pinned shingle sets, for every banded pairs plan (`near_dup_pairs`,
+    `_banded_pairs`); the join itself is `_verify_join`, which the
+    index probe shares. Output: (id_a, id_b, jaccard) with jaccard ≥
+    threshold.
     ``distinct_text=True`` also drops pairs of identical texts (equal
     ``__th``), read from the same joined rows — no extra join.
 
@@ -766,8 +779,7 @@ def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
         # array side unsorted. The hint goes ONLY on cand and ONLY
         # when the per-task build provably fits (forcing SHJ with a
         # fat build side fails outright — "Can't acquire … bytes to
-        # build hash relation" — it does NOT degrade); the cap is
-        # env-overridable for constrained deployments (r13 ADVICE).
+        # build hash relation" — it does NOT degrade).
         if n_pairs <= _VERIFY_SHJ_CAP:
             cand = cand.hint("shuffle_hash")
         # r14: SIZE the verify exchanges instead of inheriting the
@@ -800,17 +812,32 @@ def _verify_pairs(base: DataFrame, cand: DataFrame, threshold: float,
         return sh.select(F.col("__id").alias("id_" + s),
                          *[F.col(c).alias(f"{c}_{s}") for c in sh.columns[1:]])
 
-    joined = cand.join(side("a"), "id_a").join(side("b"), "id_b")
-    if distinct_text:
-        joined = joined.where(F.col("__th_a") != F.col("__th_b"))
-    return (
-        joined.select(
-            "id_a", "id_b",
-            jaccard_distinct(F.col("__sh_a"), F.col("__sh_b"))
-            .alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _verify_join(
+        cand, side("a"), side("b"), threshold,
+        F.col("__th_a") != F.col("__th_b") if distinct_text else None)
+
+
+def _verify_join(cand: DataFrame, a: DataFrame, b: DataFrame,
+                 threshold: float, where: "Column | None" = None
+                 ) -> DataFrame:
+    """The exact-Jaccard verify step of every MinHash near-dup operator:
+    candidate key pairs ``cand`` join ``a`` and ``b`` (key, shingle set,
+    …) on their first columns; pairs with `jaccard_distinct` ≥
+    ``threshold`` come out as (key_a, key_b, jaccard). ``where`` filters
+    the joined rows first.
+
+    The threshold filter sits INSIDE a Generate over the one-element
+    score array, so each pair's intersection runs once: a Filter over a
+    projected score is pushed into the join condition and the Project
+    recomputes it (one traced perfbench corpus_dedup run per side, 4
+    cores: near_dup_pairs' executor CPU 1.13 → 0.81 s)."""
+    (ka, sa), (kb, sb) = a.columns[:2], b.columns[:2]
+    joined = cand.join(a, ka).join(b, kb)
+    if where is not None:
+        joined = joined.where(where)
+    return joined.select(ka, kb, F.explode(F.filter(
+        F.array(jaccard_distinct(F.col(sa), F.col(sb))),
+        lambda j: j >= threshold)).alias("jaccard"))
 
 
 def _exact_within_pairs(keyed: DataFrame) -> DataFrame:
@@ -844,7 +871,6 @@ def near_dup_pairs(
     bands: int = 32,
     max_bucket: int = 200,
     collapse: "bool | str" = "auto",
-    exact_pairs: bool = True,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs, exact-Jaccard verified.
 
@@ -860,13 +886,15 @@ def near_dup_pairs(
     const-density — slots 162k→1.64M, distinct 8.6k→90k, max bucket
     16→43 vs cap 200).
 
-    ``exact_pairs=True`` (default) makes identical-text pairs
-    CAP-INDEPENDENT: every exact-dup cluster emits its full i<j pair
-    set (jaccard exactly 1.0) from an 8-byte-hash aggregation, whether
-    or not its LSH buckets clear ``max_bucket``, and identical-text
-    candidates are excluded from the banded verify path so no pair
-    appears twice. On top of that, ``collapse`` routes heavily-
-    duplicated corpora (exact-dup rate > 10%, measured by one
+    Identical-text pairs are CAP-INDEPENDENT: every exact-dup cluster
+    emits its full i<j pair set (jaccard exactly 1.0) from an
+    8-byte-hash aggregation, whether or not its LSH buckets clear
+    ``max_bucket``, and identical-text candidates are excluded from the
+    banded verify path so no pair appears twice. (The corpus-dedup
+    family needs connectivity only: it runs the pure banded plan,
+    `_banded_pairs`, and carries skinny member→rep exact edges instead
+    — see `_near_dup_edge_set`.) On top of that, ``collapse`` routes
+    heavily-duplicated corpora (exact-dup rate > 10%, measured by one
     count+HLL aggregation when ``"auto"``) through a collapse→mine→
     expand plan: mine LSH pairs among one REPRESENTATIVE per distinct
     text, then expand each rep pair (ra, rb, J) to all member combos —
@@ -878,19 +906,8 @@ def near_dup_pairs(
     from the branch actually taken (collapsed buckets hold one row per
     distinct text, so the cap binds later — never earlier).
 
-    ``exact_pairs=False`` restores the pure banded plan (LSH pairs
-    only, cap-limited recall on everything) — the corpus-dedup callers
-    use it and carry their own skinny member→rep exact edges.
-
     Output: (id_a, id_b, jaccard).
     """
-    if not exact_pairs:
-        base = _minhash_base(df, id_col, text_col,
-                             shingle_k, n_hashes, bands)
-        return _verify_pairs(
-            base, _bucket_pairs(_lsh_buckets(base, max_bucket)).distinct(),
-            threshold)
-
     if collapse == "auto":
         collapse, _ = _dup_rate_gate(df, text_col)
 
@@ -901,48 +918,35 @@ def near_dup_pairs(
         # column rides it) — zero extra corpus scans on this branch
         within = _exact_within_pairs(base.select(
             F.col("__id").alias("__m"), F.col("__th").alias("__h")))
-        cand = _bucket_pairs(_lsh_buckets(base, max_bucket)).distinct()
         # identical-text candidates route through `within` (and an
-        # over-cap identical cluster that never reaches `cand` still
-        # does) — the verify drops them so nothing emits twice
-        return _verify_pairs(base, cand, threshold,
-                             distinct_text=True).unionByName(within)
+        # over-cap identical cluster that never becomes a candidate
+        # still does) — the verify drops them so nothing emits twice
+        return _verify_pairs(base, _lsh_candidates(base, max_bucket),
+                             threshold, distinct_text=True
+                             ).unionByName(within)
 
-    # collapse→mine→expand: one (hash, id, text) struct-min shuffle
-    # builds the representative corpus (same construction as
-    # near_dup_canonical_dedup), mining runs on distinct texts only.
-    # members is ONE distinct (id, hash) frame shared by the
-    # within-pairs and the expansion joins (one corpus scan, not two;
-    # _exact_within_pairs array_distincts per group anyway, so feeding
-    # it pre-distincted rows is value-identical).
+    # collapse→mine→expand: mining runs on the representative corpus,
+    # distinct texts only. members is ONE distinct (id, hash) frame
+    # shared by the within-pairs and the expansion joins (one corpus
+    # scan, not two; _exact_within_pairs array_distincts per group
+    # anyway, so feeding it pre-distincted rows is value-identical).
     from .._utils import pin
 
-    keyed_t = df.select(F.col(id_col).alias("__m"),
-                        F.col(text_col).alias("__t"),
-                        F.xxhash64(F.col(text_col)).alias("__h"))
-    rep = pin(keyed_t.groupBy("__h").agg(
-        F.min(F.struct("__m", "__t")).alias("__r")))
-    reps_df = rep.select(F.col("__r.__m").alias(id_col),
-                         F.col("__r.__t").alias(text_col))
+    rep = _rep_corpus(df, id_col, text_col, pinned=True)
     members = pin(df.select(F.col(id_col).alias("__m"),
                             F.xxhash64(F.col(text_col)).alias("__h"))
                   .distinct())
     within = _exact_within_pairs(members)
-    base = _minhash_base(reps_df, id_col, text_col,
-                         shingle_k, n_hashes, bands)
     # reps are all distinct texts — a jaccard-1.0 rep pair here is two
     # DISTINCT texts with equal shingle sets, a true pair, kept
-    rep_pairs = _verify_pairs(
-        base, _bucket_pairs(_lsh_buckets(base, max_bucket)).distinct(),
-        threshold)
-    repmap = rep.select(F.col("__r.__m").alias("__ri"),
-                        F.col("__h").alias("__hh"))
+    rep_pairs = _banded_pairs(rep, id_col, text_col, threshold,
+                              shingle_k, n_hashes, bands, max_bucket)
     cross = (
         rep_pairs
-        .join(repmap.select(F.col("__ri").alias("id_a"),
-                            F.col("__hh").alias("__ha")), "id_a")
-        .join(repmap.select(F.col("__ri").alias("id_b"),
-                            F.col("__hh").alias("__hb")), "id_b")
+        .join(rep.select(F.col(id_col).alias("id_a"),
+                         F.col("__h").alias("__ha")), "id_a")
+        .join(rep.select(F.col(id_col).alias("id_b"),
+                         F.col("__h").alias("__hb")), "id_b")
         .join(members.select(F.col("__h").alias("__ha"),
                              F.col("__m").alias("__ma")), "__ha")
         .join(members.select(F.col("__h").alias("__hb"),
@@ -1075,18 +1079,13 @@ def _probe_index(nb: DataFrame, buckets: DataFrame, shingles: DataFrame,
         .select("__nid", F.explode("ids").alias("__iid"))
         .distinct()
     )
-    nsh = nb.select(F.col("__id").alias("__nid"), F.col("__sh").alias("__sh_n"))
-    ish = shingles.select(F.col("index_id").alias("__iid"),
-                          F.col("shingles").alias("__sh_i"))
-    scored = (
-        cand.join(nsh, "__nid").join(ish, "__iid")
-        .select(
-            F.col("__nid").alias("new_id"),
-            F.col("__iid").alias("index_id"),
-            jaccard_distinct(F.col("__sh_n"), F.col("__sh_i")).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    scored = _verify_join(
+        cand,
+        nb.select(F.col("__id").alias("__nid"), F.col("__sh").alias("__sh_n")),
+        shingles.select(F.col("index_id").alias("__iid"),
+                        F.col("shingles").alias("__sh_i")),
+        threshold,
+    ).withColumnsRenamed({"__nid": "new_id", "__iid": "index_id"})
     w = Window.partitionBy("new_id").orderBy(
         F.col("jaccard").desc(), F.col("index_id").asc())
     return (scored.withColumn("__rn", F.row_number().over(w))
@@ -1846,13 +1845,23 @@ def _near_dup_edge_set(
     bands: int,
     max_bucket: int,
 ) -> DataFrame:
-    """The shared adaptive-gated near-dup EDGE set (id_a, id_b):
-    unique undirected edges spanning exactly the near-dup clusters —
-    banded LSH pairs between distinct texts ∪ skinny exact-hash
-    member→rep edges. Both `near_dup_canonical_dedup` and
-    `near_dup_downsample` feed this straight to connected components
-    (assume_unique holds: the two edge families are disjoint — near
-    edges connect distinct texts, exact edges identical ones).
+    """The shared adaptive-gated near-dup EDGE set (id_a, id_b) that
+    `near_dup_canonical_dedup`, `near_dup_downsample` and
+    `near_dup_cluster_sizes` feed to connected components: banded LSH
+    pairs (`_banded_pairs`) ∪ skinny member→rep edges from an 8-byte
+    text-hash join (a text duplicated m times costs m−1 edges, not the
+    pairs contract's m²/2, and text never shuffles).
+
+    The gate measures the pinned (id, text-hash) frame. Below it the
+    banded pairs mine the corpus and the member edges read that pin
+    again, pointing at each text's min id; an identical pair within the
+    cap then comes out of both families, which only repeats min() work
+    in the CC. Above it they mine the representative corpus
+    (`_rep_corpus`), and the two families are disjoint (near edges join
+    distinct texts), so assume_unique holds. The member edges ride
+    along on BOTH branches: an exact-dup cluster larger than max_bucket
+    is invisible to the banded pairs, so without them the GATE would
+    decide whether it gets deduped at all.
 
     (r12 note: pinning the (id, text) projection here to de-duplicate
     the DAG's ~6 corpus-reading leaf stages was A/B-measured NET-
@@ -1860,77 +1869,33 @@ def _near_dup_edge_set(
     min-of-3 — the cache fill serializes what idle cores absorb; the
     scale decades get their eager materialization from the verify
     kernel's candidate count instead.)"""
-    from .._utils import memo, pin, unpin
+    from .._utils import pin, unpin
 
     keyed8 = None
 
-    def _measure():
-        # one pruned (id, xxhash64(text)) scan, pinned: the gate agg
-        # materializes it and the exact8 edges below read the 16-byte
-        # cache twice instead of re-scanning text for each join side
+    def hashed():
         nonlocal keyed8
-        keyed8 = pin(df.select(F.col(id_col).alias("__m"),
-                               F.xxhash64(F.col(text_col)).alias("__h")))
-        n, nd = keyed8.agg(F.count(F.lit(1)),
-                           F.approx_count_distinct("__h")).first()
-        return _collapse_rule(n, nd), int(n)
-
-    do_collapse = memo(df, _gate_key(text_col), _measure)[0]
-    if not do_collapse:
-        # exact_pairs=False: the CC only needs connectivity, and the
-        # skinny member→rep exact8 edges below connect identical texts
-        # with m−1 edges instead of the pairs contract's m²/2
-        pairs = near_dup_pairs(
-            df, id_col, text_col, threshold=threshold,
-            shingle_k=shingle_k, n_hashes=n_hashes, bands=bands,
-            max_bucket=max_bucket, exact_pairs=False).select("id_a", "id_b")
-        # exact-dup edges ride along UNCONDITIONALLY (8-byte-hash
-        # groupBy + 16-byte-row join — text never shuffles): an
-        # exact-dup cluster larger than max_bucket would otherwise be
-        # invisible to the banded pairs (its buckets are all dropped)
-        # while the collapse branch dedupes it via these same edges —
-        # i.e. without this the GATE would decide whether an oversized
-        # identical cluster gets deduped at all. Duplicate edges vs the
-        # LSH pairs (identical texts ≤ cap pair both ways) only repeat
-        # min() work in the CC — see connected_components.
-        if keyed8 is None:  # memoized gate skipped the fused scan
+        if keyed8 is None:
             keyed8 = pin(df.select(F.col(id_col).alias("__m"),
                                    F.xxhash64(F.col(text_col)).alias("__h")))
-        rep8 = keyed8.groupBy("__h").agg(F.min("__m").alias("id_a"))
-        exact8 = (keyed8.join(rep8, "__h")
-                  .where(F.col("id_a") != F.col("__m"))
-                  .select("id_a", F.col("__m").alias("id_b")))
-        return pairs.unionByName(exact8)
-    if keyed8 is not None:  # collapse branch re-keys with text riding
-        unpin(keyed8)
-    # heavy exact duplication: collapse to representatives. The rep
-    # corpus comes from ONE (hash, id, text) shuffle with a struct-min
-    # by id per hash group (no corpus-vs-reps semi-join pass); the
-    # member→rep edges come from a SKINNY hash join — (id, hash) only,
-    # 16 bytes/row, never a per-group member array that a
-    # billion-times-duplicated text would blow up.
-    from .._utils import pin
+        return keyed8
 
-    keyed = df.select(F.col(id_col).alias("__m"),
-                      F.col(text_col).alias("__t"),
-                      F.xxhash64(F.col(text_col)).alias("__h"))
-    rep = pin(keyed.groupBy("__h").agg(
-        F.min(F.struct("__m", "__t")).alias("__r")))
-    reps_df = rep.select(F.col("__r.__m").alias(id_col),
-                         F.col("__r.__t").alias(text_col))
-    exact_edges = (keyed.select("__m", "__h")
-                   .join(rep.select("__h", F.col("__r.__m").alias("id_a")),
-                         "__h")
-                   .where(F.col("id_a") != F.col("__m"))
-                   .select("id_a", F.col("__m").alias("id_b")))
-    near_edges = near_dup_pairs(
-        reps_df, id_col, text_col, threshold=threshold,
-        shingle_k=shingle_k, n_hashes=n_hashes, bands=bands,
-        max_bucket=max_bucket, exact_pairs=False).select("id_a", "id_b")
-    # both edge sets are unique undirected pairs, and they are disjoint
-    # (near edges connect distinct texts, exact edges identical ones),
-    # so assume_unique still holds for the union
-    return near_edges.unionByName(exact_edges)
+    if not _dup_rate_gate(df, text_col, hashed)[0]:
+        mined, members = df, hashed()
+        rep_ids = members.groupBy("__h").agg(F.min("__m").alias("id_a"))
+    else:
+        if keyed8 is not None:  # the reps re-key with text riding
+            unpin(keyed8)
+        mined = _rep_corpus(df, id_col, text_col, pinned=True)
+        members = df.select(F.col(id_col).alias("__m"),
+                            F.xxhash64(F.col(text_col)).alias("__h"))
+        rep_ids = mined.select("__h", F.col(id_col).alias("id_a"))
+    exact = (members.join(rep_ids, "__h")
+             .where(F.col("id_a") != F.col("__m"))
+             .select("id_a", F.col("__m").alias("id_b")))
+    return _banded_pairs(
+        mined, id_col, text_col, threshold, shingle_k, n_hashes, bands,
+        max_bucket).select("id_a", "id_b").unionByName(exact)
 
 
 def dup_cluster_sizes(

@@ -176,40 +176,6 @@ def rolling_fingerprint(text, window: int = 4, mod: int = 1_000_003) -> Column:
     return F.array_min(win_hash)
 
 
-def fingerprint_set(text, window: int = 4, mod: int = 1_000_003,
-                    sample_mod: int = 8) -> Column:
-    """The document's SET of sampled rolling word-window hashes — the
-    multi-fingerprint companion to `rolling_fingerprint` for cross-doc
-    overlap detection (MOSS-style). Window hashes are computed exactly
-    as there; the set keeps those ≡ 0 (mod sample_mod) — the classic
-    "0 mod p" fingerprint sampling, density 1/sample_mod, deterministic
-    and engine-reproducible (winnowing's local-min selection needs a
-    sequential scan; mod-sampling gives the same guarantee for shared
-    substrings ≥ window tokens at equal density).
-
-    Output: array<long> of distinct sampled window hashes (possibly
-    empty for short/unlucky docs).
-    """
-    toks = F.transform(whitespace_tokens(text), lambda t: F.lower(t))
-    tokval = lambda t: F.aggregate(  # noqa: E731
-        F.sequence(F.lit(1), F.length(t)),
-        F.lit(0).cast("long"),
-        lambda acc, i: (acc * 31 + F.ascii(F.substring(t, i, 1))) % mod,
-    )
-    vals = F.transform(toks, tokval)
-    n_win = F.greatest(F.size(vals) - (window - 1), F.lit(1))
-    win_hash = F.transform(
-        F.sequence(F.lit(1), n_win),
-        lambda i: F.aggregate(
-            F.slice(vals, i, window),
-            F.lit(0).cast("long"),
-            lambda acc, v: (acc * 37 + v) % mod,
-        ),
-    )
-    return F.array_distinct(
-        F.filter(win_hash, lambda h: h % sample_mod == 0))
-
-
 # ------------------------------------------------------------------ chunking
 
 def chunk_documents_by_tokens(docs, id_col: str, text_col: str,

@@ -202,7 +202,10 @@ _STALE = frozenset({
     # branch filters identical-text candidates inside the verify join
     # (same pairs, two fewer joins); jaccard_distinct let-binds its
     # intersection (same values). index_update and
-    # prebuilt_index_dedup, listed above, build one too.
+    # prebuilt_index_dedup, listed above, build one too. The eight
+    # that verify candidates (all but stream_decontaminate) change plan
+    # again: one shared verify step keeps jaccard >= threshold inside a
+    # Generate, so each pair's intersection runs once (same pairs).
     "dup_cluster_downsample", "dup_cluster_sizes", "incremental_dedup",
     "leakage_safe_split", "near_dup_cluster_dedup", "near_dup_minhash",
     "stream_decontaminate",

@@ -33,17 +33,36 @@ def test_lifecycle_helpers_live_only_in_utils():
     assert not offenders, offenders
 
 
+def _sites(pattern):
+    """(module, enclosing top-level def) of every match in the package."""
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        text = path.read_text(encoding="utf-8")
+        for m in re.finditer(pattern, text):
+            defs = re.findall(r"^def (\w+)", text[:m.start()], re.M)
+            found.append((str(path.relative_to(PKG)), defs[-1] if defs else None))
+    return found
+
+
 def test_interpreted_kgram_hashing_lives_only_in_hashed_char_shingles():
     """A JVM lambda that xxhash64-es each char k-gram (a substring window,
     or each element of `char_shingles`) is not codegen'd; the minhash
     plans hash k-grams in the `shingle_minhash` Arrow kernel. The
     interpreted form stays only as `hashed_char_shingles`, the reference
     the parity tests compare the kernel against."""
-    found = []
-    kgram_hash = r"xxhash64\(F\.substring|transform\(\s*char_shingles"
-    for path in sorted(PKG.rglob("*.py")):
-        text = path.read_text(encoding="utf-8")
-        for m in re.finditer(kgram_hash, text):
-            defs = re.findall(r"^def (\w+)", text[:m.start()], re.M)
-            found.append((str(path.relative_to(PKG)), defs[-1] if defs else None))
+    found = _sites(r"xxhash64\(F\.substring|transform\(\s*char_shingles")
     assert found == [("operators/dedup.py", "hashed_char_shingles")], found
+
+
+def test_minhash_near_dup_core_is_written_once():
+    """The MinHash near-dup operators share one collapse construction,
+    one candidate frame and one verify step; a second copy of any of
+    them can drift from the others. The streaming near-dup filter keeps
+    its own stream-static Jaccard filter, which already scores each
+    pair once."""
+    dedup = "operators/dedup.py"
+    assert _sites(r'F\.min\(F\.struct\("__m", "__t"\)\)') == [
+        (dedup, "_rep_corpus")]
+    assert _sites(r"(?<!def )\b_lsh_buckets\(") == [(dedup, "_lsh_candidates")]
+    assert _sites(r"(?<!def )\bjaccard_distinct\(") == [
+        (dedup, "_verify_join"), ("streaming/ops.py", "stream_near_dup_flags")]

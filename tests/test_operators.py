@@ -532,19 +532,36 @@ def test_verify_prune_branches_agree(spark):
     against each other at both override settings (the adaptive-gate
     lesson: both branches of a measured gate share one contract)."""
     from polars_ds_extension_spark.operators.dedup import (
-        _bucket_pairs, _lsh_buckets, _minhash_base, _verify_pairs)
+        _lsh_candidates, _minhash_base, _verify_pairs)
 
     df = spark.createDataFrame(pd.DataFrame(_mixed_dup_corpus()))
     out = {}
     for mode in (True, False):
         base = _minhash_base(df, "id", "txt", 12, 96, 32)
-        cand = _bucket_pairs(_lsh_buckets(base, 200)).distinct()
+        cand = _lsh_candidates(base, 200)
         got = _verify_pairs(base, cand, 0.6, prune=mode).toPandas()
         out[mode] = sorted(
             (int(a), int(b), round(float(j), 9))
             for a, b, j in zip(got["id_a"], got["id_b"], got["jaccard"]))
     assert out[True] == out[False]
     assert len(out[True]) > 0
+
+
+def test_verify_join_scores_each_pair_once(spark):
+    """The verify step keeps jaccard ≥ threshold inside a Generate, so
+    each candidate pair's shingle intersection appears ONCE in the
+    final AQE plan. A Filter over the projected score is pushed into
+    the join condition, and the projection then computes it again."""
+    df = spark.createDataFrame(pd.DataFrame(_mixed_dup_corpus()))
+    new = df.where(F.col("id") < 6).select(
+        (F.col("id") + 1000).alias("id"),
+        F.concat("txt", F.lit(" new")).alias("txt"))
+    for out in (D.near_dup_pairs(df, "id", "txt", collapse=False),
+                D.near_dup_against_index(new, df, "id", "txt")):
+        assert out.collect()
+        final = out._jdf.queryExecution().executedPlan().toString().split(
+            "== Initial Plan ==")[0]
+        assert final.count("array_intersect") == 1, final
 
 
 def test_near_dup_pairs_exact_clusters_are_cap_independent(spark):
