@@ -20,14 +20,15 @@ from pyspark.sql.types import LongType, TimestampNTZType
 
 from . import streaming as STR
 from .queries import _r, query
-from .sources import load_table
+from .sources import load_table, parquet_schema
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a streaming DataFrame with the same ts
     normalization as sources.load_table (nanos → timestamp)."""
-    load_table(spark, sf_dir, "events")  # sets nanosAsLong for the raw read
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    # nanos timestamps read as long under this conf, as in load_table
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
     # the file-stream source wants a directory: stream the sf dir with a
     # glob pinning it to the events file
     s = (spark.readStream.schema(raw)
@@ -218,13 +219,7 @@ def stream_curation_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL, which is exactly what the oracle pins. At scale this IS the
     streaming-ingest shape: stateless exprs keep per-micro-batch cost
     linear with zero state store."""
-    load_table(spark, sf_dir, "documents")  # sets nanosAsLong conf
-    schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")).schema
-    s = (spark.readStream.schema(schema)
-         .option("pathGlobFilter", "documents.parquet")
-         .parquet(sf_dir))
-    gated = s.select(
+    gated = _docs_stream(spark, sf_dir).select(
         "doc_id", "lang",
         _r(_T.quality_score("text")).alias("quality"),
     ).where(F.col("quality") >= 0.75)
@@ -345,8 +340,7 @@ def stream_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet as a streaming DataFrame."""
-    schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")).schema
+    schema = parquet_schema(spark, os.path.join(sf_dir, "documents.parquet"))
     return (spark.readStream.schema(schema)
             .option("pathGlobFilter", "documents.parquet")
             .parquet(sf_dir))

@@ -6,6 +6,7 @@ attributes and the i<j pair expansion each live once, in
 any of them reappears in another module of the package.
 """
 
+import ast
 import re
 from pathlib import Path
 
@@ -66,3 +67,34 @@ def test_minhash_near_dup_core_is_written_once():
     assert _sites(r"(?<!def )\b_lsh_buckets\(") == [(dedup, "_lsh_candidates")]
     assert _sites(r"(?<!def )\bjaccard_distinct\(") == [
         (dedup, "_verify_join"), ("streaming/ops.py", "stream_near_dup_flags")]
+
+
+def _inference_reads():
+    """(module, enclosing top-level def) of every `<x>.read[...].parquet(`
+    call whose reader chain sets no `.schema(...)`."""
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for top in tree.body:
+            for node in ast.walk(top):
+                if not (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "parquet"):
+                    continue
+                chain = node.func.value
+                while (isinstance(chain, ast.Call)
+                       and isinstance(chain.func, ast.Attribute)
+                       and chain.func.attr != "schema"):
+                    chain = chain.func.value
+                if isinstance(chain, ast.Attribute) and chain.attr == "read":
+                    found.append((str(path.relative_to(PKG)),
+                                  getattr(top, "name", None)))
+    return found
+
+
+def test_parquet_schema_inference_lives_only_in_the_footer_fallback():
+    """A Parquet read with no schema infers it with a Spark job. Table
+    loads read the schema from the footer on the driver instead
+    (`sources.parquet_schema`); the bare read stays only as that
+    helper's fallback for a path with no readable data file."""
+    assert _inference_reads() == [("sources/tables.py", "parquet_schema")]
