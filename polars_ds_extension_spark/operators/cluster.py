@@ -34,10 +34,12 @@ from .._utils import to_col
 __all__ = ["kmeans_fit", "kmeans_assign", "kmeans_inertia"]
 
 
-def _to_mat(col):
+def _to_mat(col, dtype="float64"):
+    """The (rows × dim) matrix of a sequence of array values (a pandas
+    Series of an array column, or collected Row fields)."""
     import numpy as np
 
-    return np.array([list(v) for v in col], dtype=np.float64)
+    return np.array([list(v) for v in col], dtype=dtype)
 
 
 def _dist2_np(X, C, rows: int = 512, temp_bytes: int = 1 << 21):

@@ -2,15 +2,25 @@
 
 Mirrors the reference's spatial queries (ref exprs/expr_knn.py:100
 query_knn_ptwise, :265 knn_avg, :471 radius_ptwise, :601 nb_cnt) but
-Spark-shaped:
+Spark-shaped. The Column helpers (`dot`, `cosine`, `l2`, ...) are JVM
+higher-order folds for scan-side filters and small LSH buckets; every
+batch kernel is numpy inside `mapInPandas` / `applyInPandas`.
 
-  * vector math is JVM higher-order (`zip_with`/`aggregate`) — no Python;
-  * the correctness path broadcasts the reference set (dims tables are
-    small: centroids, label prototypes, a query batch) so the scan side
-    streams through a broadcast-hash join — no shuffle of the big side;
-  * the scale path is random-hyperplane LSH: signatures scan-side, ONE
-    shuffle on the bucket key, exact re-rank inside buckets — never a
-    cartesian product.
+  * brute force (`knn_join`, `radius_count`, `radius_join`): the index
+    set is broadcast as a matrix (dims tables are small: centroids,
+    label prototypes, a query batch) and each Arrow batch of queries is
+    scored by one GEMM — no shuffle of the big side;
+  * SRP-LSH (`ann_lsh_join`): signatures scan-side, ONE shuffle on the
+    bucket key, exact re-rank inside buckets — never a cartesian product;
+  * IVF (`ivf_knn_join`, `ivf_search`, `ivf_cosine_pairs`, the persisted
+    vector index): vectors bucket to their nearest broadcast centroids
+    scan-side, one shuffle on the cell key brings each cell together, a
+    top-k or threshold search runs inside each cell, and one global
+    merge follows. Each IVF step is written once here and shared by
+    every IVF operator (and `embedding.ivfpq_knn_join`):
+    `_resolve_centroids`, the assignment core `_assign` behind
+    `ivf_assign` / `ivf_assign_probe`, the assign-and-salt step
+    `_salted_cells`, and the slab-chunked cosine GEMM `_cosine_slabs`.
 """
 
 from __future__ import annotations
@@ -21,6 +31,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .cluster import _assign_np, _dist2_np, _to_mat
 
 
 # ------------------------------------------------------------ vector algebra
@@ -113,6 +125,33 @@ def _topk_rows(score, ids, kk):
             np.take_along_axis(nid, order, axis=1))
 
 
+def _topk_frame(q_id: str, qids, nid, val_col: str, vals, keep=None):
+    """The (q_id, neighbor_id, <val_col>, rank) rows of a `_topk_rows`
+    selection — rank 1..kk along each row — keeping only ``keep``."""
+    kk = nid.shape[1]
+    cols = {q_id: np.repeat(qids, kk), "neighbor_id": nid.ravel(),
+            val_col: vals.ravel(),
+            "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32), len(qids))}
+    if keep is not None:
+        cols = {c: v[keep.ravel()] for c, v in cols.items()}
+    return pd.DataFrame(cols)
+
+
+def _cosine_slabs(Q, X):
+    """Yield ``(slice, cos)`` over row slabs of ``Q``: ``cos`` is the
+    (slab × |X|) cosine matrix of those rows against every row of
+    ``X`` — the dot over the product of dot-then-sqrt float64 norms, the
+    expression the SQL replays compute. The slab keeps each matrix
+    ~128 MB however large a cell or bucket gets; the per-group kernels
+    (LSH buckets, IVF cells) each apply their own emit step to it."""
+    qn = np.sqrt((Q * Q).sum(1))
+    xn = qn if X is Q else np.sqrt((X * X).sum(1))
+    chunk = max(1, (1 << 27) // max(1, len(X) * 8))
+    for s0 in range(0, len(Q), chunk):
+        sl = slice(s0, min(s0 + chunk, len(Q)))
+        yield sl, (Q[sl] @ X.T) / (qn[sl][:, None] * xn[None, :])
+
+
 # ---------------------------------------------------- brute force (broadcast)
 
 #: hard cap on broadcast index rows — at 128d float64 this is ~5 GB,
@@ -128,8 +167,6 @@ def _collect_index(index: DataFrame, i_id: str, i_vec: str,
     build (ref expr_knn.py builds one per call). Guarded: a too-big
     index fails fast with a pointer at the scale paths instead of
     silently OOMing the driver."""
-    import numpy as np
-
     # Plain collect + length check: a limit(cap+1) here routes through
     # Spark's incremental CollectLimit scale-up (1 partition, then x4,
     # ...) — sequential jobs that doubled brute-force knn wall time at
@@ -141,8 +178,7 @@ def _collect_index(index: DataFrame, i_id: str, i_vec: str,
             f"index exceeds the broadcast cap of {max_rows} rows; use "
             "ann_lsh_join / ivf_knn_join for index sets this large")
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    return ids, mat
+    return ids, _to_mat([r[1] for r in rows])
 
 
 def knn_join(
@@ -231,7 +267,7 @@ def knn_join(
         iids, m = bc.value
         for pdf in it:
             qids = pdf[q_id].to_numpy()
-            Q = np.array([list(v) for v in pdf[q_vec]], dtype=np.float64)
+            Q = _to_mat(pdf[q_vec])
             if metric == "cosine":
                 Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
                 score = -(Qn @ m.T)            # ascending = best first
@@ -262,14 +298,7 @@ def knn_join(
             keep = np.isfinite(psc)
             if max_bound is not None:
                 keep &= vals <= max_bound
-            fk = keep.ravel()
-            yield pd.DataFrame({
-                q_id: np.repeat(qids, kk)[fk],
-                "neighbor_id": nid.ravel()[fk],
-                out_val: vals.ravel()[fk],
-                "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32),
-                                score.shape[0])[fk],
-            })
+            yield _topk_frame(q_id, qids, nid, out_val, vals, keep)
 
     return queries.select(q_id, q_vec).mapInPandas(_batches, schema)
 
@@ -291,77 +320,30 @@ def knn_avg(
     )
 
 
-def radius_count(
+def _radius_map(
     queries: DataFrame, q_id: str, q_vec: str,
     index: DataFrame, i_id: str, i_vec: str,
-    radius: float, metric: str = "l2",
+    metric: str, out_ddl: str, emit,
 ) -> DataFrame:
-    """Count of index rows within ``radius`` of each query.
-    Ref expr_knn.py:601 (nb_cnt). Same broadcast-matrix + batch-GEMM
-    shape as knn_join; queries with zero neighbors emit no row."""
-    import numpy as np
-    import pandas as pd
+    """The radius kernel of `radius_count` / `radius_join`: the index
+    broadcast as a matrix (the knn_join shape), each query batch scored
+    by the metric's distance block with self pairs set to +inf, and
+    ``emit(qids, iids, dist)`` turning the block into output columns
+    (``out_ddl`` after the query id)."""
     from pyspark.sql.types import StructType
 
     ids, mat = _collect_index(index, i_id, i_vec)
-    sc = queries.sparkSession.sparkContext
-    bc = sc.broadcast((ids, mat))
+    bc = queries.sparkSession.sparkContext.broadcast((ids, mat))
     qf = queries.select(F.col(q_id)).schema.fields
     schema = StructType.fromDDL(
-        f"{q_id} {qf[0].dataType.simpleString()}, nb_cnt bigint")
+        f"{q_id} {qf[0].dataType.simpleString()}, {out_ddl}")
 
     def _batches(it):
         iids, m = bc.value
         m2 = (m * m).sum(1)
         for pdf in it:
             qids = pdf[q_id].to_numpy()
-            Q = np.array([list(v) for v in pdf[q_vec]], dtype=np.float64)
-            # each metric computes only what it needs — no discarded GEMM
-            if metric == "cosine":
-                qn = np.linalg.norm(Q, axis=1, keepdims=True)
-                mn = np.sqrt(m2)[None, :]
-                val = 1.0 - (Q @ m.T) / (qn * mn)  # cosine distance
-            elif metric in ("l1", "inf"):
-                val = _chunked_dist(Q, m, metric)
-            else:
-                d2 = (Q * Q).sum(1)[:, None] + m2[None, :] - 2.0 * (Q @ m.T)
-                d2 = np.maximum(d2, 0.0)
-                val = np.sqrt(d2) if metric == "l2" else d2
-            val[qids[:, None] == iids[None, :]] = np.inf
-            cnt = (val <= radius).sum(1)
-            keep = cnt > 0
-            yield pd.DataFrame({q_id: qids[keep], "nb_cnt": cnt[keep]})
-
-    return queries.select(q_id, q_vec).mapInPandas(_batches, schema)
-
-
-def radius_join(
-    queries: DataFrame, q_id: str, q_vec: str,
-    index: DataFrame, i_id: str, i_vec: str,
-    radius: float, metric: str = "l2",
-) -> DataFrame:
-    """All (query, index) pairs within ``radius`` — the pairwise form of
-    ``radius_count`` (ref expr_knn.py:471 query_radius_ptwise, list
-    output exploded to rows, self excluded). Same broadcast-matrix +
-    batch-GEMM shape; output (q_id, neighbor_id, dist)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import StructType
-
-    ids, mat = _collect_index(index, i_id, i_vec)
-    sc = queries.sparkSession.sparkContext
-    bc = sc.broadcast((ids, mat))
-    qf = queries.select(F.col(q_id)).schema.fields
-    schema = StructType.fromDDL(
-        f"{q_id} {qf[0].dataType.simpleString()}, neighbor_id bigint, "
-        "dist double")
-
-    def _batches(it):
-        iids, m = bc.value
-        m2 = (m * m).sum(1)
-        for pdf in it:
-            qids = pdf[q_id].to_numpy()
-            Q = np.array([list(v) for v in pdf[q_vec]], dtype=np.float64)
+            Q = _to_mat(pdf[q_vec])
             # each metric computes only what it needs — no discarded GEMM
             if metric == "cosine":
                 qn = np.linalg.norm(Q, axis=1, keepdims=True)
@@ -373,11 +355,43 @@ def radius_join(
                 d2 = np.maximum(d2, 0.0)
                 val = np.sqrt(d2) if metric == "l2" else d2
             val[qids[:, None] == iids[None, :]] = np.inf
-            qi, ii = np.nonzero(val <= radius)
-            yield pd.DataFrame({q_id: qids[qi], "neighbor_id": iids[ii],
-                                "dist": val[qi, ii]})
+            yield pd.DataFrame(emit(qids, iids, val))
 
     return queries.select(q_id, q_vec).mapInPandas(_batches, schema)
+
+
+def radius_count(
+    queries: DataFrame, q_id: str, q_vec: str,
+    index: DataFrame, i_id: str, i_vec: str,
+    radius: float, metric: str = "l2",
+) -> DataFrame:
+    """Count of index rows within ``radius`` of each query.
+    Ref expr_knn.py:601 (nb_cnt). Same broadcast-matrix + batch-GEMM
+    shape as knn_join; queries with zero neighbors emit no row."""
+    def _count(qids, iids, val):
+        cnt = (val <= radius).sum(1)
+        keep = cnt > 0
+        return {q_id: qids[keep], "nb_cnt": cnt[keep]}
+
+    return _radius_map(queries, q_id, q_vec, index, i_id, i_vec, metric,
+                       "nb_cnt bigint", _count)
+
+
+def radius_join(
+    queries: DataFrame, q_id: str, q_vec: str,
+    index: DataFrame, i_id: str, i_vec: str,
+    radius: float, metric: str = "l2",
+) -> DataFrame:
+    """All (query, index) pairs within ``radius`` — the pairwise form of
+    ``radius_count`` (ref expr_knn.py:471 query_radius_ptwise, list
+    output exploded to rows, self excluded). Same broadcast-matrix +
+    batch-GEMM shape; output (q_id, neighbor_id, dist)."""
+    def _pairs(qids, iids, val):
+        qi, ii = np.nonzero(val <= radius)
+        return {q_id: qids[qi], "neighbor_id": iids[ii], "dist": val[qi, ii]}
+
+    return _radius_map(queries, q_id, q_vec, index, i_id, i_vec, metric,
+                       "neighbor_id bigint, dist double", _pairs)
 
 
 def knn_freq_cnt(
@@ -498,6 +512,36 @@ def srp_signatures_batch(X, n_tables: int, n_planes: int):
     return sig.view(np.int64)
 
 
+def _srp_buckets(df: DataFrame, id_col: str, vec_col: str,
+                 n_tables: int, n_planes: int):
+    """The SRP signature stage of `ann_lsh_join`, which
+    `srp_bucket_stats` measures: ``(base, sigs)`` where ``base`` is
+    (__id, __vec, __nrm) over nonzero-norm rows and ``sigs`` adds one
+    (t, sig) bucket key per table, computed in one Arrow batch UDF."""
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("array<long>")
+    def _sigs(vs: pd.Series) -> pd.Series:
+        X = _to_mat(vs)
+        if X.ndim != 2 or not len(X):
+            return pd.Series([[0] * n_tables] * len(vs))
+        return pd.Series(list(srp_signatures_batch(X, n_tables, n_planes)))
+
+    # zero-norm vectors have no defined cosine; drop them scan-side so
+    # BOTH of ann_lsh_join's size routes see the same candidate set (the
+    # JVM fold yields NULL for 0/0 — sorted last — while the numpy GEMM
+    # yields NaN — which Spark orders greater than any value, i.e. ranked
+    # FIRST; the same degenerate pair would otherwise rank differently
+    # depending on which route its bucket took)
+    base = df.select(
+        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"),
+        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__nrm"),
+    ).where(F.col("__nrm") > 0)
+    return base, base.select(
+        "__id", "__vec", "__nrm",
+        F.posexplode(_sigs(F.col("__vec"))).alias("t", "sig"))
+
+
 def srp_bucket_stats(
     df: DataFrame, id_col: str, vec_col: str,
     n_tables: int = 4, n_planes: int = 12,
@@ -510,27 +554,14 @@ def srp_bucket_stats(
     a dropped count that grows with the data says the cap started
     binding (recall quietly degrading) while pair_slots growing faster
     than rows says the bucket geometry stopped fitting the corpus.
-    Replays ann_lsh_join's exact signature + bucket pipeline (zero-norm
-    rows dropped scan-side, same seeded GEMM signatures); returns
+    Builds its buckets with ann_lsh_join's own signature stage
+    (`_srp_buckets`: zero-norm rows dropped scan-side, same seeded GEMM
+    signatures), so the stats replay the operator by construction; returns
     {n_rows, n_buckets, max_bucket_size, dropped_buckets, pair_slots}
     via one tiny aggregation action."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def _sigs(vs: pd.Series) -> pd.Series:
-        X = np.array([list(v) for v in vs], dtype=np.float64)
-        if X.ndim != 2 or not len(X):
-            return pd.Series([[0] * n_tables] * len(vs))
-        return pd.Series(list(srp_signatures_batch(X, n_tables, n_planes)))
-
-    base = df.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"),
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__nrm"),
-    ).where(F.col("__nrm") > 0)
+    base, sigs = _srp_buckets(df, id_col, vec_col, n_tables, n_planes)
     n_rows = base.count()
-    sizes = (base.select(F.posexplode(_sigs(F.col("__vec")))
-                         .alias("t", "sig"))
-             .groupBy("t", "sig").agg(F.count(F.lit(1)).alias("n"))
+    sizes = (sigs.groupBy("t", "sig").agg(F.count(F.lit(1)).alias("n"))
              .where(F.col("n") >= 2))
     agg = sizes.agg(
         F.count(F.lit(1)).alias("n_buckets"),
@@ -600,33 +631,10 @@ def ann_lsh_join(
     degenerate pair differently — NULL sorts last, NaN first); such
     rows emit no output rows at all.
     """
-    from pyspark.sql.functions import pandas_udf
-
     from .._utils import pairs
 
     small_bucket = 64
-
-    @pandas_udf("array<long>")
-    def _sigs(vs: pd.Series) -> pd.Series:
-        X = np.array([list(v) for v in vs], dtype=np.float64)
-        if X.ndim != 2 or not len(X):
-            return pd.Series([[0] * n_tables] * len(vs))
-        return pd.Series(list(srp_signatures_batch(X, n_tables, n_planes)))
-
-    base = df.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec"),
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__nrm"))
-    # zero-norm vectors have no defined cosine; drop them scan-side so
-    # BOTH size routes see the same candidate set (the JVM fold yields
-    # NULL for 0/0 — sorted last — while the numpy GEMM yields NaN —
-    # which Spark orders greater than any value, i.e. ranked FIRST; the
-    # same degenerate pair would otherwise rank differently depending on
-    # which route its bucket took)
-    base = base.where(F.col("__nrm") > 0)
-    sigs = base.select(
-        "__id", "__vec", "__nrm",
-        F.posexplode(_sigs(F.col("__vec"))).alias("t", "sig"),
-    )
+    _, sigs = _srp_buckets(df, id_col, vec_col, n_tables, n_planes)
     # ONE shuffle on the bucket key collects members AND applies the
     # 2..max_bucket size guard (no separate count + semi-join pass)
     buckets = (
@@ -655,17 +663,12 @@ def ann_lsh_join(
     schema = f"id_a {id_type}, id_b {id_type}, cosine double"
 
     def _bucket_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        m = len(pdf)
-        if m < 2:
+        if len(pdf) < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
         ids = pdf["__id"].to_numpy()
-        X = np.array([list(v) for v in pdf["__vec"]], dtype=np.float64)
-        nrm = np.sqrt((X * X).sum(1))
+        X = _to_mat(pdf["__vec"])
         out = []
-        chunk = max(1, (1 << 27) // max(1, m * 8))
-        for s0 in range(0, m, chunk):
-            sl = slice(s0, min(s0 + chunk, m))
-            cos = (X[sl] @ X.T) / (nrm[sl][:, None] * nrm[None, :])
+        for sl, cos in _cosine_slabs(X, X):
             keep = ids[sl][:, None] != ids[None, :]
             if thr is not None:
                 keep &= cos >= thr
@@ -698,6 +701,90 @@ def ann_lsh_join(
 
 # ------------------------------------------------------------- IVF scale path
 
+def _resolve_centroids(
+    df: DataFrame, id_col: str, vec_col: str, n_centroids: int,
+    centroids: "str | DataFrame", seed: int,
+) -> "tuple[DataFrame, str, str]":
+    """(frame, c_id, c_vec) for an IVF operator's ``centroids``
+    argument: a prebuilt (centroid_id, centroid) DataFrame as given;
+    "first" as the rows of ``df`` with id < n_centroids (SQL-replayable;
+    needs a dense 0-based numeric id space); "sample"/"kmeans" trained
+    by `ivf_centroids`."""
+    if isinstance(centroids, DataFrame):
+        return centroids, "centroid_id", "centroid"
+    if centroids == "first":
+        return df.where(F.col(id_col) < n_centroids), id_col, vec_col
+    return (ivf_centroids(df, id_col, vec_col, n_centroids,
+                          method=centroids, seed=seed),
+            "centroid_id", "centroid")
+
+
+def _assign(
+    df: DataFrame, id_col: str, vec_col: str,
+    centroids: DataFrame, c_id: str, c_vec: str,
+    nprobe: int, carry_vec: bool, probe: bool,
+) -> DataFrame:
+    """The centroid-broadcast assignment behind `ivf_assign` (nprobe=1,
+    no ``probe`` column) and `ivf_assign_probe`: collect the centroids,
+    sort them by id, broadcast them, and give each row of every Arrow
+    batch its ``nprobe`` nearest cells by the exact (x−c)² distance,
+    ties toward the LOWEST centroid id. Output (id_col, centroid_id
+    [, probe] [, vec_col])."""
+    crows = centroids.select(c_id, c_vec).collect()
+    if not crows:
+        raise ValueError(
+            f"{'ivf_assign_probe' if probe else 'ivf_assign'}: centroid "
+            "frame is empty — with centroids='first' this means no row "
+            "has id < n_centroids (the contract assumes dense 0-based "
+            "ids); use centroids='kmeans'/'sample' or pass a prebuilt "
+            "centroid frame for filtered/offset/string id spaces")
+    # natural dtype (ints -> int64, strings -> str, decimals -> object):
+    # the output schema derives cid_type from the centroid frame, so the
+    # collected ids must NOT be coerced to int64 — a string/decimal
+    # centroid id would raise here while the schema promised it back
+    cids = np.array([r[0] for r in crows])
+    # sort by centroid id so the first-occurrence tie-break lands on
+    # the lowest cid — the ORDER BY (distance, cid) replay contract
+    order = np.argsort(cids, kind="stable")
+    bc = df.sparkSession.sparkContext.broadcast(
+        (cids[order], _to_mat([r[1] for r in crows])[order]))
+    npb = min(nprobe, len(cids))
+    id_type = df.schema[id_col].dataType.simpleString()
+    cid_type = centroids.schema[c_id].dataType.simpleString()
+    schema = f"{id_col} {id_type}, centroid_id {cid_type}"
+    if probe:
+        schema += ", probe int"
+    if carry_vec:
+        schema += f", {vec_col} {df.schema[vec_col].dataType.simpleString()}"
+
+    def _batches(it):
+        ids_c, Cm = bc.value
+        pos = np.arange(len(ids_c))
+        # the row slab bounds the materialized (slab × n_centroids)
+        # distance matrix; _dist2_np cache-blocks the (x−c)² arithmetic
+        slab = max(1, (1 << 23) // max(1, len(ids_c) * 8))
+        for pdf in it:
+            if not len(pdf):
+                continue
+            X = _to_mat(pdf[vec_col])
+            if npb == 1:
+                sel, _ = _assign_np(X, Cm)
+            else:
+                sel = np.concatenate([
+                    _topk_rows(_dist2_np(X[s0:s0 + slab], Cm), pos, npb)[1]
+                    for s0 in range(0, len(X), slab)])
+            out = {id_col: np.repeat(pdf[id_col].values, npb),
+                   "centroid_id": ids_c[sel].ravel()}
+            if probe:
+                out["probe"] = np.tile(
+                    np.arange(1, npb + 1, dtype=np.int32), len(X))
+            if carry_vec:
+                out[vec_col] = np.repeat(pdf[vec_col].values, npb)
+            yield pd.DataFrame(out)
+
+    return df.select(id_col, vec_col).mapInPandas(_batches, schema)
+
+
 def ivf_assign(
     df: DataFrame, id_col: str, vec_col: str,
     centroids: DataFrame, c_id: str, c_vec: str,
@@ -725,49 +812,25 @@ def ivf_assign(
     overhead at small scale — the r11 knn_auto_route probe was ~90%
     task scheduling on 10 MB of data) with zero extra plan nodes.
     """
-    import numpy as np
-    import pandas as pd
+    return _assign(df, id_col, vec_col, centroids, c_id, c_vec,
+                   nprobe=1, carry_vec=carry_vec, probe=False)
 
-    from .cluster import _assign_np
 
-    crows = centroids.select(c_id, c_vec).collect()
-    if not crows:
-        raise ValueError(
-            "ivf_assign: centroid frame is empty — with centroids='first' "
-            "this means no row has id < n_centroids (the contract assumes "
-            "dense 0-based ids); use centroids='kmeans'/'sample' or pass a "
-            "prebuilt centroid frame for filtered/offset/string id spaces")
-    # natural dtype (ints -> int64, strings -> str, decimals -> object):
-    # the output schema derives cid_type from the centroid frame, so the
-    # collected ids must NOT be coerced to int64 — a string/decimal
-    # centroid id would raise here while the schema promised it back
-    cids = np.array([r[0] for r in crows])
-    C = np.array([list(r[1]) for r in crows], dtype=np.float64)
-    # sort by centroid id so argmin's first-occurrence tie-break lands on
-    # the lowest cid — the ORDER BY (distance, cid) replay contract
-    order = np.argsort(cids, kind="stable")
-    cids, C = cids[order], C[order]
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((cids, C))
-    id_type = df.schema[id_col].dataType.simpleString()
-    cid_type = centroids.schema[c_id].dataType.simpleString()
-    schema = f"{id_col} {id_type}, centroid_id {cid_type}"
-    if carry_vec:
-        schema += f", {vec_col} {df.schema[vec_col].dataType.simpleString()}"
-
-    def _batches(it):
-        ids_c, Cm = bc.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            X = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            a, _ = _assign_np(X, Cm)
-            out = {id_col: pdf[id_col].values, "centroid_id": ids_c[a]}
-            if carry_vec:
-                out[vec_col] = pdf[vec_col].values
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, vec_col).mapInPandas(_batches, schema)
+def ivf_assign_probe(
+    df: DataFrame, id_col: str, vec_col: str,
+    centroids: DataFrame, c_id: str, c_vec: str,
+    nprobe: int = 2,
+    carry_vec: bool = False,
+) -> DataFrame:
+    """Assign each vector to its ``nprobe`` nearest centroids (l2,
+    ties toward the LOWEST centroid id — the multi-probe generalization
+    of ivf_assign, same broadcast + vectorized-batch shape, no
+    shuffle). Output: (id_col, centroid_id, probe) with probe 1..nprobe.
+    ``carry_vec=True`` passes the vector through (repeated per probe) —
+    see ivf_assign; replaces the join-back-by-id in the search paths.
+    """
+    return _assign(df, id_col, vec_col, centroids, c_id, c_vec,
+                   nprobe=nprobe, carry_vec=carry_vec, probe=True)
 
 
 def ivf_centroids(
@@ -788,8 +851,6 @@ def ivf_centroids(
 
     Output: (centroid_id bigint, centroid array<double>).
     """
-    import numpy as np
-
     spark = df.sparkSession
     if method == "first":
         return df.where(F.col(id_col) < n_centroids).select(
@@ -800,7 +861,7 @@ def ivf_centroids(
     frac = min(1.0, pool_n / max(total, 1) * 1.5)
     pool = (df.select(vec_col).sample(fraction=frac, seed=seed)
             .limit(pool_n).collect())
-    X = np.array([list(r[0]) for r in pool], dtype=np.float64)
+    X = _to_mat([r[0] for r in pool])
     if X.shape[0] < n_centroids:
         raise ValueError(
             f"ivf_centroids: sample ({X.shape[0]}) smaller than "
@@ -809,8 +870,6 @@ def ivf_centroids(
     if method == "sample":
         C = X[rng.choice(X.shape[0], n_centroids, replace=False)]
     elif method == "kmeans":
-        from .cluster import _assign_np
-
         # farthest-point init, then Lloyd on the sample. Assignment via
         # the slab-chunked _assign_np: the naive (pool × C × dim)
         # broadcast temporary is ~64·C²·d doubles — at the auto-route
@@ -843,6 +902,52 @@ def ivf_centroids(
     return out
 
 
+def _salted_cells(
+    df: DataFrame, id_col: str, vec_col: str, n_centroids: int,
+    centroids: "str | DataFrame", max_cell: "int | None", seed: int,
+    carry_vec: bool = True,
+) -> "tuple[DataFrame, DataFrame | None]":
+    """The IVF cell stage of `ivf_knn_join`, `ivf_cosine_pairs` and
+    `ivf_cell_stats`: resolve the centroids, assign each row to its
+    nearest cell, and salt cells larger than ``max_cell`` into
+    ceil(n/max_cell) sub-cells. Returns ``(tagged, pinned)``: tagged
+    rows are (centroid_id, __id[, __vec], __salt); ``pinned`` is the
+    pinned assignment output when salting applies, else None. The pin
+    is LRU-evicted via _utils and released at harness boundaries by
+    release_pins(); a caller that consumes its frames may unpin it."""
+    from .._utils import pin
+
+    cents, c_id, c_vec = _resolve_centroids(df, id_col, vec_col,
+                                            n_centroids, centroids, seed)
+    # carry_vec: (id, vec, cell) straight off the assignment batch —
+    # no corpus-wide join-back-by-id (see ivf_assign)
+    tagged = (ivf_assign(df, id_col, vec_col, cents, c_id, c_vec,
+                         carry_vec=carry_vec)
+              .select(F.col(id_col).alias("__id"),
+                      *([F.col(vec_col).alias("__vec")] if carry_vec
+                        else []),
+                      "centroid_id"))
+    if max_cell is None:
+        return tagged.withColumn("__salt", F.lit(0)), None
+    # the cell census and the per-cell stage both read the assignment
+    # output, and Spark does not share the two subtrees: unpinned, each
+    # call ran the Θ(N·C·d) assignment twice (measured: semantic_dedup
+    # 7.7 s unsalted → 12.0 s when the salted default engaged the
+    # census). The census is ≤ n_centroids rows and joins back by
+    # broadcast — no shuffle of the big side beyond the caller's own
+    # cell-key shuffle.
+    pinned = pin(tagged)
+    cell_n = F.broadcast(
+        pinned.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("__cn")))
+    salted = pinned.join(cell_n, "centroid_id").withColumn(
+        "__salt",
+        F.when(F.col("__cn") <= max_cell, F.lit(0)).otherwise(F.pmod(
+            F.xxhash64(F.col("__id")),
+            F.ceil(F.col("__cn") / max_cell).cast("long"))),
+    ).drop("__cn")
+    return salted, pinned
+
+
 def ivf_knn_join(
     df: DataFrame, id_col: str, vec_col: str,
     n_centroids: int = 16, k: int = 5,
@@ -872,6 +977,10 @@ def ivf_knn_join(
     degenerate cell from OOMing an executor — the slab chunking below
     bounds the SCORE MATRIX, not the group itself. Pass max_cell=None
     only when the cell-size distribution is known to be bounded.
+    With salting, the assignment output is pinned so the cell census
+    and the search read one assignment pass (`_salted_cells`); the pin
+    escapes the call, as in ivf_cosine_pairs — it is LRU-evicted via
+    _utils and released at harness boundaries by release_pins().
 
     The within-cell search is ONE numpy GEMM + argpartition per
     (cell, salt) group (`applyInPandas`): the n²/C pair term runs as
@@ -882,38 +991,8 @@ def ivf_knn_join(
     ~100× smaller constant. The (query-chunk × cell) score matrix is
     slab-chunked to ~128 MB. Output: (id, neighbor_id, cosine, rank).
     """
-    import numpy as np
-    import pandas as pd
-
-    if isinstance(centroids, DataFrame):
-        cents = centroids
-        c_id, c_vec = "centroid_id", "centroid"
-    elif centroids == "first":
-        cents, c_id, c_vec = df.where(F.col(id_col) < n_centroids), id_col, vec_col
-    else:
-        cents = ivf_centroids(df, id_col, vec_col, n_centroids,
-                              method=centroids, seed=seed)
-        c_id, c_vec = "centroid_id", "centroid"
-    # carry_vec: (id, vec, cell) straight off the assignment batch —
-    # no corpus-wide join-back-by-id (see ivf_assign)
-    tagged = (ivf_assign(df, id_col, vec_col, cents, c_id, c_vec,
-                         carry_vec=True)
-              .select(F.col(id_col).alias("__id"),
-                      F.col(vec_col).alias("__vec"), "centroid_id"))
-    if max_cell is not None:
-        # salt oversized cells into ceil(n/max_cell) sub-cells; the count
-        # frame is ≤ n_centroids rows → broadcast join, no extra shuffle
-        # of the big side beyond the cell-key shuffle it already does
-        cell_n = F.broadcast(
-            tagged.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("__cn")))
-        tagged = tagged.join(cell_n, "centroid_id").withColumn(
-            "__salt",
-            F.when(F.col("__cn") <= max_cell, F.lit(0)).otherwise(F.pmod(
-                F.xxhash64(F.col("__id")),
-                F.ceil(F.col("__cn") / max_cell).cast("long"))),
-        ).drop("__cn")
-    else:
-        tagged = tagged.withColumn("__salt", F.lit(0))
+    tagged, _ = _salted_cells(df, id_col, vec_col, n_centroids, centroids,
+                              max_cell, seed)
     id_type = df.schema[id_col].dataType.simpleString()
     schema = (f"{id_col} {id_type}, neighbor_id {id_type}, "
               "cosine double, rank int")
@@ -924,101 +1003,19 @@ def ivf_knn_join(
             return pd.DataFrame(
                 {id_col: [], "neighbor_id": [], "cosine": [], "rank": []})
         ids = pdf["__id"].to_numpy()
-        X = np.array([list(v) for v in pdf["__vec"]], dtype=np.float64)
-        # norms via the same dot-then-sqrt float64 expression the JVM /
-        # SQL replay uses; cosine = dot / (na·nb)
-        nrm = np.sqrt((X * X).sum(1))
+        X = _to_mat(pdf["__vec"])
         kk = min(k, m - 1)
         out = []
-        # slab-chunk the query rows so the (chunk × m) score matrix
-        # stays ~128 MB however big an unsalted cell gets
-        chunk = max(1, (1 << 27) // max(1, m * 8))
-        for s0 in range(0, m, chunk):
-            sl = slice(s0, min(s0 + chunk, m))
-            cos = (X[sl] @ X.T) / (nrm[sl][:, None] * nrm[None, :])
+        for sl, cos in _cosine_slabs(X, X):
             score = -cos
             # exclude self by position (ids are unique within a cell)
             score[np.arange(sl.stop - sl.start), np.arange(sl.start, sl.stop)] = np.inf
             psc, nid = _topk_rows(score, ids, kk)
-            out.append(pd.DataFrame({
-                id_col: np.repeat(ids[sl], kk),
-                "neighbor_id": nid.ravel(),
-                "cosine": -psc.ravel(),
-                "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32),
-                                sl.stop - sl.start),
-            }))
+            out.append(_topk_frame(id_col, ids[sl], nid, "cosine", -psc))
         return pd.concat(out, ignore_index=True)
 
     return (tagged.groupBy("centroid_id", "__salt")
             .applyInPandas(_cell_topk, schema))
-
-
-def ivf_assign_probe(
-    df: DataFrame, id_col: str, vec_col: str,
-    centroids: DataFrame, c_id: str, c_vec: str,
-    nprobe: int = 2,
-    carry_vec: bool = False,
-) -> DataFrame:
-    """Assign each vector to its ``nprobe`` nearest centroids (l2,
-    ties toward the LOWEST centroid id — the multi-probe generalization
-    of ivf_assign, same broadcast + vectorized-batch shape, no
-    shuffle). Output: (id_col, centroid_id, probe) with probe 1..nprobe.
-    ``carry_vec=True`` passes the vector through (repeated per probe) —
-    see ivf_assign; replaces the join-back-by-id in the search paths.
-    """
-    crows = centroids.select(c_id, c_vec).collect()
-    if not crows:
-        raise ValueError(
-            "ivf_assign_probe: centroid frame is empty — see ivf_assign; "
-            "'first' centroids require dense 0-based ids")
-    cids = np.array([r[0] for r in crows])
-    C = np.array([list(r[1]) for r in crows], dtype=np.float64)
-    order = np.argsort(cids, kind="stable")
-    cids, C = cids[order], C[order]
-    npb = min(nprobe, len(cids))
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((cids, C))
-    id_type = df.schema[id_col].dataType.simpleString()
-    cid_type = centroids.schema[c_id].dataType.simpleString()
-    schema = f"{id_col} {id_type}, centroid_id {cid_type}, probe int"
-    if carry_vec:
-        schema += f", {vec_col} {df.schema[vec_col].dataType.simpleString()}"
-
-    def _batches(it):
-        from .cluster import _dist2_np
-
-        ids_c, Cm = bc.value
-        pos = np.arange(len(ids_c))
-        # row slab bounds the materialized (slab × n_centroids) distance
-        # matrix; the (x−c)² arithmetic itself runs through the cache-
-        # blocked exact kernel (see cluster._dist2_np — r16: kills the
-        # 32-worker memory-bandwidth contention of the old ~256 MB
-        # broadcast temporary, bit-identical values)
-        slab = max(1, (1 << 23) // max(1, Cm.shape[0] * 8))
-        for pdf in it:
-            if not len(pdf):
-                continue
-            X = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            sels = []
-            for s0 in range(0, len(X), slab):
-                sl = slice(s0, s0 + slab)
-                # direct (x-c)² sum — the same float64 expression the
-                # SQL replay computes (see ivf_assign)
-                d = _dist2_np(X[sl], Cm)
-                _, sel = _topk_rows(d, pos, npb)
-                sels.append(sel)
-            sel = np.concatenate(sels) if len(sels) > 1 else sels[0]
-            out = {
-                id_col: np.repeat(pdf[id_col].values, npb),
-                "centroid_id": ids_c[sel].ravel(),
-                "probe": np.tile(np.arange(1, npb + 1, dtype=np.int32),
-                                 len(X)),
-            }
-            if carry_vec:
-                out[vec_col] = np.repeat(pdf[vec_col].values, npb)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, vec_col).mapInPandas(_batches, schema)
 
 
 def ivf_search(
@@ -1053,15 +1050,8 @@ def ivf_search(
     (centroid_id, centroid) DataFrame.
     Output: (q_id, neighbor_id, cosine, rank).
     """
-    if isinstance(centroids, DataFrame):
-        cents, c_id, c_vec = centroids, "centroid_id", "centroid"
-    elif centroids == "first":
-        cents, c_id, c_vec = (index.where(F.col(i_id) < n_centroids),
-                              i_id, i_vec)
-    else:
-        cents = ivf_centroids(index, i_id, i_vec, n_centroids,
-                              method=centroids, seed=seed)
-        c_id, c_vec = "centroid_id", "centroid"
+    cents, c_id, c_vec = _resolve_centroids(index, i_id, i_vec,
+                                            n_centroids, centroids, seed)
     # carry_vec: the (id, vec, centroid_id) rows come straight out of
     # the scan-side assignment batch — no corpus-wide join-back-by-id
     # (a full embedding-lake shuffle at 100 TB; 2-3 stages of pure task
@@ -1097,26 +1087,15 @@ def _ivf_cell_topk(qtag: DataFrame, itag: DataFrame, q_id: str, k: int,
                 {q_id: [], "neighbor_id": [], "cosine": [], "rank": []})
         qids = qpdf["__qid"].to_numpy()
         iids = ipdf["__iid"].to_numpy()
-        Q = np.array([list(v) for v in qpdf["__qvec"]], dtype=np.float64)
-        X = np.array([list(v) for v in ipdf["__ivec"]], dtype=np.float64)
-        qn = np.sqrt((Q * Q).sum(1))
-        xn = np.sqrt((X * X).sum(1))
         out = []
-        chunk = max(1, (1 << 27) // max(1, len(iids) * 8))
-        for s0 in range(0, len(qids), chunk):
-            sl = slice(s0, min(s0 + chunk, len(qids)))
-            score = -(Q[sl] @ X.T) / (qn[sl][:, None] * xn[None, :])
+        for sl, cos in _cosine_slabs(_to_mat(qpdf["__qvec"]),
+                                     _to_mat(ipdf["__ivec"])):
+            score = -cos
             score[qids[sl][:, None] == iids[None, :]] = np.inf
             kk = min(k, score.shape[1])
             psc, nid = _topk_rows(score, iids, kk)
-            keep = np.isfinite(psc).ravel()
-            out.append(pd.DataFrame({
-                q_id: np.repeat(qids[sl], kk)[keep],
-                "neighbor_id": nid.ravel()[keep],
-                "cosine": -psc.ravel()[keep],
-                "rank": np.tile(np.arange(1, kk + 1, dtype=np.int32),
-                                sl.stop - sl.start)[keep],
-            }))
+            out.append(_topk_frame(q_id, qids[sl], nid, "cosine", -psc,
+                                   np.isfinite(psc)))
         return pd.concat(out, ignore_index=True)
 
     per_cell = (qtag.groupBy("centroid_id")
@@ -1149,9 +1128,8 @@ def _ivf_stamp_of(crows, train: "str | None" = None) -> str:
     import hashlib
 
     cids = np.array([r[0] for r in crows])
-    C = np.array([list(r[1]) for r in crows], dtype=np.float64)
     order = np.argsort(cids, kind="stable")
-    C = np.round(C[order], 9)
+    C = np.round(_to_mat([r[1] for r in crows])[order], 9)
     fp = hashlib.sha1(C.tobytes()).hexdigest()[:12]
     base = f"{len(crows)}/{C.shape[1]}/{fp}"
     return f"{base}/{train}" if train else base
@@ -1223,15 +1201,8 @@ def build_vector_index(
     against THESE centroids, so update ≡ rebuild holds frame-for-frame
     against `build_vector_index(old ∪ new, centroids=<same frame>)`.
     """
-    if isinstance(centroids, DataFrame):
-        cents, c_id, c_vec = centroids, "centroid_id", "centroid"
-    elif centroids == "first":
-        cents, c_id, c_vec = (df.where(F.col(id_col) < n_centroids),
-                              id_col, vec_col)
-    else:
-        cents = ivf_centroids(df, id_col, vec_col, n_centroids,
-                              method=centroids, seed=seed)
-        c_id, c_vec = "centroid_id", "centroid"
+    cents, c_id, c_vec = _resolve_centroids(df, id_col, vec_col,
+                                            n_centroids, centroids, seed)
     crows = cents.select(c_id, c_vec).collect()
     if not crows:
         raise ValueError(
@@ -1257,14 +1228,23 @@ def build_vector_index(
         [(r[0], [float(x) for x in r[1]]) for r in crows],
         schema=f"centroid_id {cid_type}, centroid array<double>"),
         "_ivf", stamp, persist=False)
-    cells = _stamp(
-        ivf_assign(df, id_col, vec_col, cents_out.drop("_ivf"),
-                   "centroid_id", "centroid", carry_vec=True)
-        .select("centroid_id", F.col(id_col).alias("vec_id"),
-                F.transform(F.col(vec_col),
-                            lambda x: x.cast("double")).alias("vec")),
-        "_ivf", stamp)
+    cells = _stamp(_index_cells(df, id_col, vec_col, cents_out.drop("_ivf")),
+                   "_ivf", stamp)
     return cents_out, cells
+
+
+def _index_cells(df: DataFrame, id_col: str, vec_col: str,
+                 centroids: DataFrame) -> DataFrame:
+    """The inverted-file rows of a persisted vector index, (centroid_id,
+    vec_id, vec: array<double>), for ``df`` assigned against a
+    (centroid_id, centroid) frame — the one projection
+    `build_vector_index` and `update_vector_index` both write, so an
+    update's cells stack onto a build's."""
+    return (ivf_assign(df, id_col, vec_col, centroids,
+                       "centroid_id", "centroid", carry_vec=True)
+            .select("centroid_id", F.col(id_col).alias("vec_id"),
+                    F.transform(F.col(vec_col),
+                                lambda x: x.cast("double")).alias("vec")))
 
 
 def search_vector_index(
@@ -1351,12 +1331,7 @@ def update_vector_index(
     (the assignment batch fails loudly on mismatch)."""
     c_chk, x_chk, stamp = _check_ivf_stamp(centroids, cells,
                                            require=True)
-    new_cells = (ivf_assign(new, id_col, vec_col, c_chk,
-                            "centroid_id", "centroid", carry_vec=True)
-                 .select("centroid_id", F.col(id_col).alias("vec_id"),
-                         F.transform(F.col(vec_col),
-                                     lambda x: x.cast("double"))
-                         .alias("vec")))
+    new_cells = _index_cells(new, id_col, vec_col, c_chk)
     # pinned and re-stamped like build_vector_index's artifact (a
     # downstream probe's cell join would otherwise replay the batch
     # assignment and the old-cells read). Both generations carry the
@@ -1382,48 +1357,14 @@ def ivf_cosine_pairs(
     bucketing as ``ivf_knn_join`` (one shuffle on centroid_id, optional
     ``max_cell`` salting bounds the quadratic term on skew) but emits
     the full thresholded pair set (id_a < id_b) instead of top-k —
-    recall is cluster-bounded exactly as published.
+    recall is cluster-bounded exactly as published. With salting, the
+    assignment output is pinned (`_salted_cells`) and the pin escapes
+    the call: it is LRU-evicted via _utils and released at harness
+    boundaries by release_pins().
     Output: (id_a, id_b, cosine).
     """
-    if isinstance(centroids, DataFrame):
-        cents, c_id, c_vec = centroids, "centroid_id", "centroid"
-    elif centroids == "first":
-        cents, c_id, c_vec = df.where(F.col(id_col) < n_centroids), id_col, vec_col
-    else:
-        cents = ivf_centroids(df, id_col, vec_col, n_centroids,
-                              method=centroids, seed=seed)
-        c_id, c_vec = "centroid_id", "centroid"
-    import numpy as np
-    import pandas as pd
-
-    # carry_vec: (id, vec, cell) straight off the assignment batch —
-    # no corpus-wide join-back-by-id (see ivf_assign)
-    tagged = (ivf_assign(df, id_col, vec_col, cents, c_id, c_vec,
-                         carry_vec=True)
-              .select(F.col(id_col).alias("__id"),
-                      F.col(vec_col).alias("__vec"), "centroid_id"))
-    if max_cell is not None:
-        # r15: the cell census and the pair mine both consume the
-        # assignment output, and Spark does not CSE the two subtrees —
-        # the salted default was paying the Θ(N·C·d) assignment GEMM
-        # TWICE (measured: semantic_dedup 7.7 s unsalted → 12.0 s when
-        # the r15 default engaged the census). Pin the tagged frame so
-        # assignment runs once and the census is a cached-read agg —
-        # the same persisted-heavy-intermediate discipline as the
-        # minhash verify base; LRU-evicted via _utils, released at
-        # harness boundaries by release_pins().
-        from .._utils import pin
-        tagged = pin(tagged)
-        cell_n = F.broadcast(
-            tagged.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("__cn")))
-        tagged = tagged.join(cell_n, "centroid_id").withColumn(
-            "__salt",
-            F.when(F.col("__cn") <= max_cell, F.lit(0)).otherwise(F.pmod(
-                F.xxhash64(F.col("__id")),
-                F.ceil(F.col("__cn") / max_cell).cast("long"))),
-        ).drop("__cn")
-    else:
-        tagged = tagged.withColumn("__salt", F.lit(0))
+    tagged, _ = _salted_cells(df, id_col, vec_col, n_centroids, centroids,
+                              max_cell, seed)
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"id_a {id_type}, id_b {id_type}, cosine double"
     thr = float(min_cosine)
@@ -1433,19 +1374,13 @@ def ivf_cosine_pairs(
         # leaves the group — the n²/C term runs as BLAS flops and the
         # emitted set is only the qualifying pairs (same as the old
         # self-join + filter, minus the per-pair JVM array folds and the
-        # full candidate-pair shuffle). Query rows slab-chunked as in
-        # ivf_knn_join so a giant unsalted cell streams instead of OOMs.
-        m = len(pdf)
-        if m < 2:
+        # full candidate-pair shuffle)
+        if len(pdf) < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
         ids = pdf["__id"].to_numpy()
-        X = np.array([list(v) for v in pdf["__vec"]], dtype=np.float64)
-        nrm = np.sqrt((X * X).sum(1))
+        X = _to_mat(pdf["__vec"])
         out = []
-        chunk = max(1, (1 << 27) // max(1, m * 8))
-        for s0 in range(0, m, chunk):
-            sl = slice(s0, min(s0 + chunk, m))
-            cos = (X[sl] @ X.T) / (nrm[sl][:, None] * nrm[None, :])
+        for sl, cos in _cosine_slabs(X, X):
             ra, cb = np.nonzero(
                 (cos >= thr) & (ids[sl][:, None] < ids[None, :]))
             out.append(pd.DataFrame({
@@ -1471,44 +1406,19 @@ def ivf_cell_stats(
     semantic-dedup wall with linear within_pairs is constants/weather,
     while a jump in within_pairs names a fused/hot cluster that the
     ``max_cell`` salting either bounded (max_group ≤ max_cell) or —
-    when ``max_cell=None``, semantic_dedup's default — didn't.
+    when ``max_cell=None`` — didn't.
 
-    Replays ivf_cosine_pairs' assignment + salting VERBATIM (kept in
-    sync by the shared params and tests; duplicated rather than
-    refactored so the mined kernel's covering code is untouched), then
-    ONE group-size aggregation. Returns {n_vectors, n_cells, n_groups,
-    max_group, p99_group, within_pairs}.
+    Builds its groups with ivf_cosine_pairs' own assignment + salting
+    step (`_salted_cells`, without the vectors), so the groups it counts
+    are the groups the pair mine scores, then runs ONE group-size
+    aggregation and releases the assignment pin. Returns {n_vectors,
+    n_cells, n_groups, max_group, p99_group, within_pairs}.
     """
-    if isinstance(centroids, DataFrame):
-        cents, c_id, c_vec = centroids, "centroid_id", "centroid"
-    elif centroids == "first":
-        cents, c_id, c_vec = df.where(F.col(id_col) < n_centroids), id_col, vec_col
-    else:
-        cents = ivf_centroids(df, id_col, vec_col, n_centroids,
-                              method=centroids, seed=seed)
-        c_id, c_vec = "centroid_id", "centroid"
-    tagged = (ivf_assign(df, id_col, vec_col, cents, c_id, c_vec,
-                         carry_vec=False)
-              .select(F.col(id_col).alias("__id"), "centroid_id"))
-    if max_cell is not None:
-        # same single-assignment-pass discipline as ivf_cosine_pairs
-        # (r15): census + size agg share one pinned assignment output.
-        # This frame is skinny (id, cell) but the assignment feeding it
-        # is the same GEMM. Released below — this helper fully consumes
-        # its frames before returning.
-        from .._utils import pin, unpin
-        pinned = pin(tagged)
-        cell_n = F.broadcast(
-            pinned.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("__cn")))
-        tagged = pinned.join(cell_n, "centroid_id").withColumn(
-            "__salt",
-            F.when(F.col("__cn") <= max_cell, F.lit(0)).otherwise(F.pmod(
-                F.xxhash64(F.col("__id")),
-                F.ceil(F.col("__cn") / max_cell).cast("long"))),
-        ).drop("__cn")
-    else:
-        pinned = None
-        tagged = tagged.withColumn("__salt", F.lit(0))
+    from .._utils import unpin
+
+    tagged, pinned = _salted_cells(df, id_col, vec_col, n_centroids,
+                                   centroids, max_cell, seed,
+                                   carry_vec=False)
     sizes = (tagged.groupBy("centroid_id", "__salt")
              .agg(F.count(F.lit(1)).alias("g")))
     try:
@@ -1521,8 +1431,8 @@ def ivf_cell_stats(
             F.sum(F.col("g") * (F.col("g") - 1) / 2).alias("within_pairs"),
         ).first()
     finally:
-        # release on the error path too (r15 advice) — a failed .first()
-        # previously leaked the pin until LRU/release_pins
+        # released on the error path too — a failed .first() would
+        # otherwise leak the pin until LRU eviction or release_pins
         if pinned is not None:
             unpin(pinned)
     return {

@@ -460,6 +460,56 @@ def test_ivfpq_recall_vs_bruteforce(spark):
     assert a == b
 
 
+
+def test_ivfpq_probing_every_cell_equals_pq_knn_join(spark):
+    """With nprobe >= the centroid count every query probes every cell,
+    so IVF-PQ must return the broadcast PQ search over the same codes:
+    the same (q_id, neighbor_id, rank), adc_dist to 1e-12, on data with
+    no ADC tie inside the top k. A centroid frame with its own column
+    names (c_id / c_vec) routes the same way."""
+    import numpy as np
+
+    from polars_ds_extension_spark.operators import embedding as EMB
+    from polars_ds_extension_spark.operators import knn as K
+
+    rng = np.random.default_rng(11)
+    centers = rng.normal(0, 5, (6, 16))
+    X = np.vstack([c + rng.normal(0, 1.0, (30, 16)) for c in centers])
+    Q = X[:10] + rng.normal(0, 0.3, (10, 16))
+    idx = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(len(X))],
+        "vec_id long, v array<double>")
+    qs = spark.createDataFrame(
+        [(1000 + i, Q[i].tolist()) for i in range(len(Q))],
+        "q_id long, v array<double>")
+    books = EMB.pq_train(idx.orderBy("vec_id"), "v", m=4, k=16,
+                         sample_rows=180, method="kmeans", seed=3)
+    cents = K.ivf_centroids(idx, "vec_id", "v", n_centroids=5,
+                            method="kmeans", seed=1)
+    ref = EMB.pq_knn_join(qs, "q_id", "v",
+                          EMB.pq_encode(idx, "vec_id", "v", books),
+                          "vec_id", "codes", books, k=6).collect()
+    by_q = {}
+    for r in ref:
+        by_q.setdefault(r["q_id"], {})[r["rank"]] = r["adc_dist"]
+    # tie-free: the six best distances of every query strictly increase
+    assert all(np.all(np.diff([d[i] for i in range(1, 7)]) > 0)
+               for d in by_q.values())
+    want = sorted((r["q_id"], r["neighbor_id"], r["rank"], r["adc_dist"])
+                  for r in ref if r["rank"] <= 5)
+    renamed = cents.select(F.col("centroid_id").alias("cid"),
+                           F.col("centroid").alias("cvec"))
+    for cf, c_id, c_vec, nprobe in [(cents, "centroid_id", "centroid", 5),
+                                    (renamed, "cid", "cvec", 8)]:
+        got = sorted(
+            (r["q_id"], r["neighbor_id"], r["rank"], r["adc_dist"])
+            for r in EMB.ivfpq_knn_join(
+                qs, "q_id", "v", idx, "vec_id", "v", books, cf,
+                nprobe=nprobe, k=5, c_id=c_id, c_vec=c_vec).collect())
+        assert [g[:3] for g in got] == [w[:3] for w in want]
+        assert all(abs(g[3] - w[3]) <= 1e-12 for g, w in zip(got, want))
+
+
 # ---------------------------------------------------------------- gapfill
 
 def test_fill_time_gaps_ffill_and_null(spark):

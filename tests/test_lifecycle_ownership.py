@@ -69,6 +69,24 @@ def test_minhash_near_dup_core_is_written_once():
         (dedup, "_verify_join"), ("streaming/ops.py", "stream_near_dup_flags")]
 
 
+
+def test_vector_search_core_is_written_once():
+    """Every IVF operator resolves its centroids, assigns and salts its
+    cells and scores cosine slabs through one helper each, and the SRP
+    operator and its stats share one signature stage; a second copy can
+    drift from the first (a salting copy that did not pin ran the
+    assignment twice). Catalog queries still call the public
+    `ivf_centroids` directly, so only bare in-package calls count."""
+    knn = "operators/knn.py"
+    assert _sites(r"(?<!def )(?<![\w.])ivf_centroids\(") == [
+        (knn, "_resolve_centroids")]
+    assert _sites(r'alias\("__cn"\)') == [(knn, "_salted_cells")]
+    assert _sites(r"1 << 27") == [(knn, "_cosine_slabs")]
+    assert _sites(r"(?<!def )srp_signatures_batch\(") == [
+        (knn, "_srp_buckets")]
+    for mod in (knn, "operators/embedding.py"):
+        assert "np.array([list(" not in (PKG / mod).read_text(), mod
+
 def _inference_reads():
     """(module, enclosing top-level def) of every `<x>.read[...].parquet(`
     call whose reader chain sets no `.schema(...)`."""

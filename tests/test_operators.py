@@ -1323,6 +1323,54 @@ def test_ivf_cell_stats_matches_pair_plan(spark):
                               max_cell=5)
     assert salted["max_group"] <= 2 * 5  # hash salt is uneven, ~cap
     assert salted["within_pairs"] < stats["within_pairs"] + 190
+    # the salted groups are the groups the salted mine scores
+    assert salted["within_pairs"] == K.ivf_cosine_pairs(
+        df, "vec_id", "v", min_cosine=-1.0, n_centroids=1,
+        max_cell=5).count()
+
+
+def _assignment_runs(plan):
+    """How many times an executed plan computes a MapInPandas: once per
+    node outside cached relations, plus once per distinct cached
+    relation for the nodes inside it (a cache is computed once however
+    many scans read it)."""
+    cached, outside, stack = {}, 0, [plan]
+    while stack:
+        p = stack.pop()
+        cls = p.getClass().getSimpleName()
+        if cls == "InMemoryTableScanExec":
+            inner = p.relation().cachedPlan().toString()
+            cached[inner] = inner.count("MapInPandas")
+            continue
+        outside += p.nodeName() == "MapInPandas"
+        if cls == "AdaptiveSparkPlanExec":
+            stack.append(p.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            stack.append(p.plan())
+        kids = p.children()
+        stack.extend(kids.apply(i) for i in range(kids.length()))
+    return outside + sum(cached.values())
+
+
+def test_ivf_knn_join_assigns_once_when_salted(spark):
+    """With salting engaged (the default max_cell), the cell census and
+    the top-k search read one assignment pass: the final executed plan
+    computes the assignment MapInPandas once, and the rows equal the
+    unsalted plan's when no cell is over the cap."""
+    from polars_ds_extension_spark._utils import release_pins
+
+    rng = np.random.default_rng(3)
+    X = np.concatenate([c + rng.normal(size=(15, 4))
+                        for c in rng.normal(size=(4, 4)) * 10])
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(len(X))],
+        "id long, v array<double>")
+    salted = K.ivf_knn_join(df, "id", "v", n_centroids=4, k=3)
+    got = sorted(tuple(r) for r in salted.collect())
+    assert _assignment_runs(salted._jdf.queryExecution().executedPlan()) == 1
+    plain = K.ivf_knn_join(df, "id", "v", n_centroids=4, k=3, max_cell=None)
+    assert got and got == sorted(tuple(r) for r in plain.collect())
+    release_pins()
 
 
 def test_ann_recall_counts_exact_overlap(spark):
